@@ -11,6 +11,10 @@ Architecture: everything is declared through the Spark SQL DataFrame API
 so Catalyst/Tungsten own the physical plan. Custom operators (as-of join,
 MinHash LSH, blocked similarity) are compositions of built-in operators;
 Python executes only inside Arrow-batched pandas UDFs, never per row.
+Frames built from rows held on the driver (centroids, merge tables,
+run-log rows) go through `io.local_frame`: one Arrow table handed to the
+JVM and planned as a `LocalTableScan`, so reading them starts no Python
+worker.
 """
 
 from base_etl_spark.session import build_session, execute_fully

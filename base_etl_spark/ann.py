@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from base_etl_spark.io import Tables
+from base_etl_spark.io import Tables, local_frame
 from base_etl_spark.registry import query
 
 _SCORE_SCHEMA = StructType(
@@ -52,8 +52,8 @@ def blocked_topk(
         # No probes (an empty corpus yields an empty probe set): the
         # answer is the empty ranking — np.stack below would raise on a
         # zero-length list, killing a job that has a well-defined result.
-        return corpus.sparkSession.createDataFrame(
-            [], "probe_id long, neighbor_id long, cos_sim double, rn int"
+        return local_frame(
+            corpus.sparkSession, [], "probe_id long, neighbor_id long, cos_sim double, rn int"
         )
     probe_ids = np.array([p[0] for p in probes], dtype=np.int64)
     pmat = np.stack([p[1] for p in probes]).astype(np.float64)

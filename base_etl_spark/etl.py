@@ -14,11 +14,11 @@ from __future__ import annotations
 import datetime as dt
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from base_etl_spark.functions import money
-from base_etl_spark.io import Tables, load_tables
+from base_etl_spark.io import Tables, load_tables, local_frame
 from base_etl_spark.registry import query
 from base_etl_spark import sinks
 
@@ -62,12 +62,15 @@ def run_daily_job(
     against embedded Derby). The JDBC leg is replay-idempotent too:
     the logical date's rows are deleted before the append, so re-running
     a backfill date never double-inserts (delete+append ~= partition
-    overwrite for databases). Returns the row count written."""
+    overwrite for databases). Returns the row count written, observed
+    on the parquet write itself (no second pass over the join)."""
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out = daily_order_summary(spark, sf_dir, day).withColumn(
         "ds", F.date_format("o_orderdate", "yyyy-MM-dd")
     )
-    out.write.mode("overwrite").partitionBy("ds").parquet(out_path)
+    obs = Observation()
+    written = out.observe(obs, F.count(F.lit(1)).alias("rows"))
+    written.write.mode("overwrite").partitionBy("ds").parquet(out_path)
     if jdbc_url:
         # ANSI-quoted column (Spark's JDBC writer creates case-sensitive
         # lowercase identifiers) + VARCHAR cast (Derby maps StringType to
@@ -80,7 +83,7 @@ def run_daily_job(
         sinks.build_jdbc_writer(
             out, jdbc_url, jdbc_table, properties=jdbc_properties
         ).save()
-    return out.count()
+    return obs.get["rows"]
 
 
 def run_range(
@@ -127,7 +130,8 @@ def run_range(
         }
         results.append(rec)
         if run_log_path:
-            spark.createDataFrame([rec], schema=_RUN_LOG_SCHEMA).write.mode(
+            # rec's keys are in _RUN_LOG_SCHEMA's column order
+            local_frame(spark, [tuple(rec.values())], _RUN_LOG_SCHEMA).write.mode(
                 "append"
             ).parquet(run_log_path)
     return results

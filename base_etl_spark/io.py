@@ -1,4 +1,6 @@
-"""Central loader: the ONLY supported way to read the fixture tables.
+"""Central loader: the ONLY supported way to read the fixture tables,
+and the one way to turn rows held on the driver into a DataFrame
+(`local_frame`).
 
 Handles the ns-timestamp ingestion (FIXTURES.md gotcha 1) once, asserts
 schemas against the footer, and registers every table as a temp view so
@@ -13,13 +15,14 @@ materialize anything and stays inside whole-stage codegen.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import DataType, LongType, TimestampType
 
 from base_etl_spark import schemas
 
@@ -94,26 +97,62 @@ class Tables:
 _CACHE: weakref.WeakKeyDictionary[SparkSession, dict[str, Tables]] = (
     weakref.WeakKeyDictionary()
 )
+# the sf_dir each session's temp views point at
+_VIEWS_DIR: weakref.WeakKeyDictionary[SparkSession, str] = weakref.WeakKeyDictionary()
 
 
 def load_tables(spark: SparkSession, sf_dir: str | None = None) -> Tables:
     """Load (memoized per session+dir) all tables and register views.
 
     Temp views are session-global and last-writer-wins: loading a second
-    sf_dir repoints the views, which is why every call re-registers its
-    own directory's views before returning. Hold the returned Tables and
-    use attribute access for multi-dir work; `spark.sql` always sees the
+    sf_dir repoints the views, so a call re-registers its directory's
+    views when the session's views point at another directory, and
+    leaves them alone otherwise. Hold the returned Tables and use
+    attribute access for multi-dir work; `spark.sql` always sees the
     most recently loaded directory.
     """
     sf_dir = os.path.abspath(sf_dir or DEFAULT_SF_DIR)
     per_session = _CACHE.setdefault(spark, {})
     if sf_dir not in per_session:
         per_session[sf_dir] = Tables(spark, sf_dir)
-    else:
-        # re-register views in case another sf_dir overwrote them
+    elif _VIEWS_DIR.get(spark) != sf_dir:
         for name in schemas.TABLE_NAMES:
             per_session[sf_dir]._dfs[name].createOrReplaceTempView(name)
+    _VIEWS_DIR[spark] = sf_dir
     return per_session[sf_dir]
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A DataFrame over rows held on the driver, planned as a JVM
+    `LocalTableScan`.
+
+    `spark.createDataFrame(<python list>)` pickles the rows into an RDD
+    (`Scan ExistingRDD`), and every task that reads it starts a Python
+    worker. This builds one `pyarrow.Table` in `ddl`'s types instead and
+    hands it to the JVM as Arrow batches, so reading it stays in the JVM.
+
+    `rows` are tuples (or Rows) in the schema's column order; `ddl` is a
+    schema string such as ``"k int, name string"``. Naive datetimes keep
+    `createDataFrame`'s meaning: process-local time.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = DataType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    width = len(schema.fields)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"local_frame: every row needs {width} values for {ddl!r}")
+    arrays = []
+    for i, f in enumerate(schema.fields):
+        values = [r[i] for r in rows]
+        if isinstance(f.dataType, TimestampType):
+            # naive -> process-local time, as TimestampType.toInternal reads it
+            values = [None if v is None else v.astimezone(dt.timezone.utc) for v in values]
+        arrays.append(pa.array(values, type=arrow_schema.field(i).type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def events_between(spark: SparkSession, sf_dir: str, start_us: int, end_us: int) -> DataFrame:

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from base_etl_spark.io import Tables
+from base_etl_spark.io import Tables, local_frame
 from base_etl_spark.registry import query
 
 
@@ -950,7 +950,7 @@ def sketch_cms_freq(t: Tables) -> DataFrame:
     )
     schema = "event_type string, n_exact long, n_est long, n_over long"
     if not exact:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     cms_bytes = typed.agg(
         F.count_min_sketch(
             F.col("event_type"), F.lit(0.001), F.lit(0.99), F.lit(42)
@@ -963,8 +963,8 @@ def sketch_cms_freq(t: Tables) -> DataFrame:
         (r.event_type, r.n_exact, int(sketch.estimateCount(r.event_type)))
         for r in exact
     ]
-    return spark.createDataFrame(
-        [(et, n, est, est - n) for et, n, est in rows], schema
+    return local_frame(
+        spark, [(et, n, est, est - n) for et, n, est in rows], schema
     ).orderBy("event_type")
 
 
@@ -4737,8 +4737,8 @@ def events_markov_stationary(t: Tables) -> DataFrame:
     pm = REGISTRY["events_transition_matrix"].fn.tables_fn(t)
     rows = pm.select("prev", "curr", "n_transitions").collect()
     if not rows:
-        return t.events.sparkSession.createDataFrame(
-            [], "event_type string, stationary_p double, n_rounds int"
+        return local_frame(
+            t.events.sparkSession, [], "event_type string, stationary_p double, n_rounds int"
         )
     states = sorted({r.prev for r in rows} | {r.curr for r in rows})
     idx = {s: i for i, s in enumerate(states)}
@@ -4763,8 +4763,8 @@ def events_markov_stationary(t: Tables) -> DataFrame:
             f"events_markov_stationary: no convergence in {_MARKOV_MAX_ROUNDS} rounds"
         )
     out = [(s, round(float(pi[idx[s]]), 9), rounds) for s in states]
-    return t.events.sparkSession.createDataFrame(
-        out, "event_type string, stationary_p double, n_rounds int"
+    return local_frame(
+        t.events.sparkSession, out, "event_type string, stationary_p double, n_rounds int"
     )
 
 

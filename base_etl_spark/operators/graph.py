@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from base_etl_spark import iterstats
-from base_etl_spark.io import Tables
+from base_etl_spark.io import Tables, local_frame
 from base_etl_spark.registry import query
 
 _PR_DAMPING = 0.85
@@ -61,7 +61,7 @@ def graph_pagerank(t: Tables) -> DataFrame:
         # tolerance below divides by zero.
         for df in (edges, edges_deg, nodes):
             df.unpersist()
-        return t.spark.createDataFrame([], "node string, rank double")
+        return local_frame(t.spark, [], "node string, rank double")
     tol = 0.01 / n  # 1% of uniform mass
     base = (1.0 - _PR_DAMPING) / n
 

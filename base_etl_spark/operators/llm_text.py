@@ -11,6 +11,7 @@ ln() (libm) needs a 6dp round.
 
 from __future__ import annotations
 
+import json
 import zlib
 
 import pandas as pd
@@ -19,7 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from base_etl_spark.io import Tables
+from base_etl_spark.io import Tables, local_frame
 from base_etl_spark.registry import query
 
 # tiny English stopword list used by langid / quality scoring; keep in
@@ -1455,8 +1456,9 @@ def tokenizer_bpe_train(t: Tables) -> DataFrame:
     (one hash agg with map-side partials); every round after that is
     vocab-bounded — an in-row pair transform + explode (pair rows ≤
     symbols per word), one hash agg, a bounded top-K collect, and one
-    in-row fold rewriting the symbol arrays (F.aggregate with a
-    pend/out accumulator — merged-pair emission, left-to-right). The
+    in-row fold rewriting the symbol arrays (SQL aggregate() with a
+    pend/out accumulator — merged-pair emission, left-to-right — whose
+    round batch is a column of data, not SQL text). The
     vocab frame is localCheckpoint'ed per round, so lineage stays flat
     and each round's cost is honest; driver state is ≤ _BPE_TOPK
     (left, right, count) rows per round. r12: merges are BATCHED — the
@@ -1471,14 +1473,15 @@ def tokenizer_bpe_train(t: Tables) -> DataFrame:
     merges, _, rounds = _bpe_train(t.documents)
     iterstats.record("tokenizer_bpe_train", rounds)
 
-    return spark.createDataFrame(
-        merges,
+    return local_frame(
+        spark, merges,
         "merge_rank int, left_sym string, right_sym string,"
         " merged string, pair_count bigint",
     )
 
 
 _BPE_TOPK = 24  # ranked pairs collected per round for the batch guard
+_BPE_BATCH_TYPE = "array<struct<l: string, r: string, m: string>>"
 
 
 def _pick_merge_batch(
@@ -1608,43 +1611,26 @@ def _bpe_train(documents: DataFrame):
         " ELSE CAST(array() AS ARRAY<STRUCT<l: STRING, r: STRING>>) END"
     )
     # left-to-right non-overlapping merge: fold with a 1-symbol
-    # lookbehind ('pend'); Column lambdas keep arbitrary symbol
-    # text safe (no SQL-literal splicing). A factory (not default
-    # args) binds the round's batch — F.aggregate inspects the
-    # lambda's arity. One pass applies EVERY pair in the batch: the
-    # guard guarantees batch pairs never share an occurrence symbol
-    # (G1 in _pick_merge_batch), so "pend matches some l_i and s
-    # matches that pair's r_i" fires for at most one pair per step and
-    # the single pass equals the sequential per-pair passes.
-    def _merge_factory(_batch: list[tuple[str, str, str, int]]):
-        def _merge(a, s):
-            flush = F.struct(
-                F.concat(a["out"], F.array(a["pend"])).alias("out"),
-                s.alias("pend"),
-            )
-            res = flush
-            for _l, _r, _m, _c in reversed(_batch):
-                res = F.when(
-                    (a["pend"] == F.lit(_l)) & (s == F.lit(_r)),
-                    F.struct(
-                        F.concat(a["out"], F.array(F.lit(_m))).alias("out"),
-                        F.lit(None).cast("string").alias("pend"),
-                    ),
-                ).otherwise(res)
-            return F.when(
-                a["pend"].isNull(),
-                F.struct(a["out"].alias("out"), s.alias("pend")),
-            ).otherwise(res)
-
-        return _merge
-
-    init = F.struct(
-        F.array().cast("array<string>").alias("out"),
-        F.lit(None).cast("string").alias("pend"),
-    )
-    fin = lambda a: F.when(  # noqa: E731
-        a["pend"].isNull(), a["out"]
-    ).otherwise(F.concat(a["out"], F.array(a["pend"])))
+    # lookbehind ('pend'). The round's batch reaches the fold as data, a
+    # `_batch` column parsed from a JSON literal, so the fold is one
+    # constant expression parsed once and symbol text is never spliced
+    # into SQL (variable substitution would rewrite a symbol like
+    # '${x}'). One pass applies EVERY pair in the batch: the guard
+    # guarantees batch pairs never share an occurrence symbol (G1 in
+    # _pick_merge_batch), so "pend matches some l_i and s matches that
+    # pair's r_i" fires for at most one pair per step and the single
+    # pass equals the sequential per-pair passes.
+    hit = "filter(_batch, b -> b.l = a.pend AND b.r = s)"
+    fold = F.expr(
+        "aggregate(syms,"
+        " named_struct('out', CAST(array() AS ARRAY<STRING>), 'pend', CAST(NULL AS STRING)),"
+        " (a, s) -> CASE"
+        "  WHEN a.pend IS NULL THEN named_struct('out', a.out, 'pend', s)"
+        f"  WHEN size({hit}) > 0 THEN named_struct("
+        f"   'out', concat(a.out, array(element_at({hit}, 1).m)), 'pend', CAST(NULL AS STRING))"
+        "  ELSE named_struct('out', concat(a.out, array(a.pend)), 'pend', s) END,"
+        " a -> CASE WHEN a.pend IS NULL THEN a.out ELSE concat(a.out, array(a.pend)) END)"
+    ).alias("syms")
 
     merges: list[tuple[int, str, str, str, int]] = []
     merged_strings: set[str] = set()
@@ -1672,9 +1658,12 @@ def _bpe_train(documents: DataFrame):
         for left, right, merged, cnt in batch:
             merges.append((len(merges) + 1, left, right, merged, cnt))
             merged_strings.add(merged)
-        vocab = vocab.withColumn(
-            "syms", F.aggregate("syms", init, _merge_factory(batch), fin)
-        ).localCheckpoint(eager=False)
+        batch_json = json.dumps([{"l": l, "r": r, "m": m} for l, r, m, _c in batch])
+        vocab = (
+            vocab.withColumn("_batch", F.from_json(F.lit(batch_json), _BPE_BATCH_TYPE))
+            .select("w", "freq", fold)
+            .localCheckpoint(eager=False)
+        )
         rounds += 1
     return merges, vocab, rounds
 

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from base_etl_spark import iterstats
-from base_etl_spark.io import Tables
+from base_etl_spark.io import Tables, local_frame
 from base_etl_spark.registry import query
 from base_etl_spark.schemas import EMBEDDING_DIM
 
@@ -484,7 +484,7 @@ def dedup_threshold_sweep(t: Tables) -> DataFrame:
             )
         ).alias("theta")
     )
-    th_df = spark.createDataFrame([(x,) for x in _SWEEP_THETAS], "theta double")
+    th_df = local_frame(spark, [(x,) for x in _SWEEP_THETAS], "theta double")
     counts = hits.groupBy("theta").agg(F.count(F.lit(1)).alias("n"))
     return th_df.join(counts, "theta", "left").select(
         "theta", F.coalesce("n", F.lit(0)).cast("long").alias("n_pairs")
@@ -852,7 +852,7 @@ def cluster_kmeans(t: Tables) -> DataFrame:
 
     rounds_used = 0
     for rounds_used in range(1, _KMEANS_MAX_ROUNDS + 1):
-        cents_df = spark.createDataFrame(cents_rows, schema)
+        cents_df = local_frame(spark, cents_rows, schema)
         assigned = assign(cents_df)
         new_rows = {
             int(r.cluster_id): [float(x) for x in r.centroid]
@@ -879,7 +879,7 @@ def cluster_kmeans(t: Tables) -> DataFrame:
         )
     iterstats.record("cluster_kmeans", rounds_used)
 
-    final_cents = spark.createDataFrame(cents_rows, schema)
+    final_cents = local_frame(spark, cents_rows, schema)
     return assign(final_cents).select(
         "vec_id",
         F.col("best.c").alias("cluster_id"),
@@ -1421,7 +1421,7 @@ def sim_recall_at_k(t: Tables) -> DataFrame:
         "probe_id", F.greatest("rn_e", "rn_a").alias("m")
     )
     spark = t.embeddings.sparkSession
-    ks = spark.createDataFrame([(k,) for k in _RECALL_KS], "k int")
+    ks = local_frame(spark, [(k,) for k in _RECALL_KS], "k int")
     dom = exact.select("probe_id").distinct().crossJoin(F.broadcast(ks))
     return (
         dom.join(matches, "probe_id", "left")
@@ -1497,8 +1497,8 @@ def embedding_pca_power(t: Tables) -> DataFrame:
     n = emb.count()
     if n == 0:
         emb.unpersist()
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             "dim int, loading double, eigenvalue double, explained_share double,"
             " conv_delta double",
         )
@@ -1549,8 +1549,8 @@ def embedding_pca_power(t: Tables) -> DataFrame:
         )
         for i in range(EMBEDDING_DIM)
     ]
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "dim int, loading double, eigenvalue double, explained_share double,"
         " conv_delta double",
     )
@@ -1591,13 +1591,13 @@ def sim_pq_quantize(t: Tables) -> DataFrame:
 
     trained = _pq_train(t.embeddings)
     if trained is None:  # empty corpus: no codebook to train
-        return t.embeddings.sparkSession.createDataFrame(
-            [], "sub_id int, code int, n_vecs bigint, mse double"
+        return local_frame(
+            t.embeddings.sparkSession, [], "sub_id int, code int, n_vecs bigint, mse double"
         )
     assign, cent_rows, spark = trained
     iterstats.record("sim_pq_quantize", _PQ_ROUNDS)
 
-    final = assign(spark.createDataFrame(cent_rows, _PQ_CENT_SCHEMA))
+    final = assign(local_frame(spark, cent_rows, _PQ_CENT_SCHEMA))
     return (
         final.groupBy("sub_id", F.col("best.c").alias("code"))
         .agg(
@@ -1659,7 +1659,7 @@ def _pq_train(emb: DataFrame):
         )
 
     for _ in range(_PQ_ROUNDS):
-        cdf = spark.createDataFrame(cent_rows, _PQ_CENT_SCHEMA)
+        cdf = local_frame(spark, cent_rows, _PQ_CENT_SCHEMA)
         new_rows = {
             (int(r.sub_id), int(r.code)): [float(x) for x in r.cent]
             for r in assign(cdf)
@@ -1814,12 +1814,12 @@ def sim_topk_pq(t: Tables) -> DataFrame:
     )
     trained = _pq_train(t.embeddings)
     if trained is None:
-        return t.embeddings.sparkSession.createDataFrame([], out_schema)
+        return local_frame(t.embeddings.sparkSession, [], out_schema)
     assign, cent_rows, spark = trained
     iterstats.record("sim_topk_pq", _PQ_ROUNDS)
     subdim = EMBEDDING_DIM // _PQ_SUBS
 
-    codes = assign(spark.createDataFrame(cent_rows, _PQ_CENT_SCHEMA)).select(
+    codes = assign(local_frame(spark, cent_rows, _PQ_CENT_SCHEMA)).select(
         "vec_id", "sub_id", F.col("best.c").alias("code")
     )
     probe_rows = (
@@ -1835,8 +1835,8 @@ def sim_topk_pq(t: Tables) -> DataFrame:
                 (pv[s * subdim + j] - cent[j]) ** 2 for j in range(subdim)
             )
             dtab_rows.append((int(pr.vec_id), s, c, float(d)))
-    dtab = spark.createDataFrame(
-        dtab_rows, "probe_id bigint, sub_id int, code int, pdist double"
+    dtab = local_frame(
+        spark, dtab_rows, "probe_id bigint, sub_id int, code int, pdist double"
     )
     # ADC sum in FIXED sub_id order (ADVICE r7): a bare F.sum's partial
     # aggregation order varies with partition layout, and the numpy
@@ -2091,7 +2091,7 @@ def _ivfpq_search(t: Tables, nprobe: int) -> DataFrame | None:
     iterstats.record("sim_topk_ivfpq", _PQ_ROUNDS)
     subdim = EMBEDDING_DIM // _PQ_SUBS
 
-    codes = assign(spark.createDataFrame(cent_rows, _PQ_CENT_SCHEMA)).select(
+    codes = assign(local_frame(spark, cent_rows, _PQ_CENT_SCHEMA)).select(
         "vec_id", "sub_id", F.col("best.c").alias("code")
     )
     labels = t.embeddings.select("vec_id", "label")
@@ -2124,8 +2124,8 @@ def _ivfpq_search(t: Tables, nprobe: int) -> DataFrame | None:
         for s, c, cent in cent_rows:
             d = sum((pv[s * subdim + j] - cent[j]) ** 2 for j in range(subdim))
             dtab_rows.append((int(pr.probe_id), s, c, float(d)))
-    dtab = spark.createDataFrame(
-        dtab_rows, "probe_id bigint, sub_id int, code int, pdist double"
+    dtab = local_frame(
+        spark, dtab_rows, "probe_id bigint, sub_id int, code int, pdist double"
     )
     # fixed-order ADC sum: 8 conditional partial sums added left-to-right
     # (the sim_topk_pq determinism spelling — codegen, no per-group arrays)
@@ -2183,8 +2183,8 @@ def sim_topk_ivfpq(t: Tables) -> DataFrame:
     of payload — the whole point of PQ residency."""
     out = _ivfpq_search(t, nprobe=5)
     if out is None:
-        return t.embeddings.sparkSession.createDataFrame(
-            [], "probe_id bigint, rank int, neighbor_id bigint,"
+        return local_frame(
+            t.embeddings.sparkSession, [], "probe_id bigint, rank int, neighbor_id bigint,"
             " adc_dist double, label int"
         )
     return out

@@ -42,7 +42,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from base_etl_spark.io import Tables
+from base_etl_spark.io import Tables, local_frame
 from base_etl_spark.registry import REGISTRY, query
 
 # (key, check_name) in output order — the oracle literal is generated
@@ -900,6 +900,6 @@ def selfcheck_battery(t: Tables) -> DataFrame:
     workers = max(2, min(8, spark.sparkContext.defaultParallelism // 4))
     with ThreadPoolExecutor(max_workers=workers) as pool:
         rows = list(pool.map(inheritable_thread_target(_run), _CHECKS))
-    return spark.createDataFrame(
-        rows, "key string, check_name string, passed boolean"
+    return local_frame(
+        spark, rows, "key string, check_name string, passed boolean"
     )

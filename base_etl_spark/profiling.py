@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from base_etl_spark.io import Tables
+from base_etl_spark.io import Tables, local_frame
 from base_etl_spark.registry import query
 
 
@@ -160,7 +160,7 @@ def agg_observe_metrics(t: Tables) -> DataFrame:
     observed.count()  # the anchoring action; populates the observation
     m = obs.get
     spark = t.orders.sparkSession
-    return spark.createDataFrame(
-        [(m["n_rows"], m["revenue"], m["min_price"], m["max_price"], m["n_final"])],
+    return local_frame(
+        spark, [(m["n_rows"], m["revenue"], m["min_price"], m["max_price"], m["n_final"])],
         "n_rows bigint, revenue double, min_price double, max_price double, n_final bigint",
     )

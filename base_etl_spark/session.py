@@ -55,6 +55,13 @@ def build_session(
         # dims (region/nation/customer/supplier/part) stay broadcastable
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Off: PySpark's DataFrame debugging wraps every Column and
+        # DataFrame call in py4j round trips that record the Python
+        # file:line (PySparkCurrentOrigin.set/clear): about ten commands
+        # per call, over half of what a plan build sends. The only loss
+        # is that Python call site in DataFrame error messages; the error
+        # class and the JVM stack trace are unchanged.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # split even single-file inputs into >= one task per core: the
         # fixture tables are one small file each, and a 1-task scan
         # serializes every downstream pipeline until the first shuffle.

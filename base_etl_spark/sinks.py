@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 
 from base_etl_spark import schemas
-from base_etl_spark.io import Tables
+from base_etl_spark.io import Tables, local_frame
 from base_etl_spark.registry import query
 
 
@@ -815,7 +815,7 @@ def scan_csv_permissive(t: Tables) -> DataFrame:
     # drops the absent group, e.g. a source file of only corrupt lines).
     # Left join against the static two-value domain; no-op when both
     # groups occur.
-    domain = t.spark.createDataFrame([(False,), (True,)], "is_corrupt boolean")
+    domain = local_frame(t.spark, [(False,), (True,)], "is_corrupt boolean")
     return domain.join(grouped, "is_corrupt", "left").select(
         "is_corrupt", F.coalesce("n_rows", F.lit(0).cast("long")).alias("n_rows")
     )
@@ -1183,8 +1183,8 @@ def scan_json_permissive(t: Tables) -> DataFrame:
         F.round(F.sum("c_acctbal"), 2).alias("sum_acctbal"),
     )
     # all three classes are load-bearing even at count 0 (empty tier)
-    domain = t.spark.createDataFrame(
-        [("good",), ("partial",), ("syntax",)], "row_class string"
+    domain = local_frame(
+        t.spark, [("good",), ("partial",), ("syntax",)], "row_class string"
     )
     return domain.join(grouped, "row_class", "left").select(
         "row_class",
@@ -1317,7 +1317,7 @@ def sink_ledger_census(t: Tables) -> DataFrame:
        row landed in EXACTLY one published epoch — duplicated batches
        overshoot n_events, vanished batches undershoot.
 
-    The returned frame is rebuilt via createDataFrame from the collected
+    The returned frame is rebuilt via io.local_frame from the collected
     census (bounded: one row per event type) so the temp dirs can be
     deleted eagerly instead of leaking until the driver materializes.
 
@@ -1395,6 +1395,6 @@ def sink_ledger_census(t: Tables) -> DataFrame:
             rows = []
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "event_type string, n_events bigint, min_ts timestamp, max_ts timestamp"
+    return local_frame(
+        spark, rows, "event_type string, n_events bigint, min_ts timestamp, max_ts timestamp"
     )

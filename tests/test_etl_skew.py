@@ -20,6 +20,13 @@ def test_daily_job_writes_one_partition(spark, tmp_path):
     assert {str(r.ds) for r in back.select("ds").distinct().collect()} == {"1995-06-19"}
 
 
+def test_daily_job_date_without_orders_returns_zero(spark, tmp_path):
+    """The row count is observed on the write; a date with no orders
+    writes nothing and reports 0."""
+    out = str(tmp_path / "daily_empty")
+    assert etl.run_daily_job(spark, SF_TEST, dt.date(2030, 1, 1), out) == 0
+
+
 def test_daily_job_idempotent_overwrite(spark, tmp_path):
     day = dt.date(1995, 6, 19)  # 5 orders at sf0.001 (measured)
     out = str(tmp_path / "daily2")

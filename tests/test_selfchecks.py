@@ -4,6 +4,7 @@ tier."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from base_etl_spark import queries
@@ -1696,6 +1697,44 @@ def test_bpe_train_matches_reference_planted(spark):
         )
     ]
     assert got == _ref_bpe(freqs, 8), got
+
+
+@pytest.mark.parametrize(
+    "corpus",
+    [
+        # merges quote, backslash, newline, double quote, '${x}' and '</w>'
+        "\\u0041 " * 9 + "${x} " * 9 + "'\\\n\" " * 10 + "</w> x'\\u0041${x}",
+        # merges the six characters of '\\u0041' and '${x}'
+        "\\u0041 " * 9 + "${x} " * 8 + "'\n\" " * 7 + "</w> x'\\u0041${x}",
+    ],
+)
+def test_bpe_train_hostile_symbols_match_reference(spark, corpus):
+    """Symbols that SQL text would mangle (quotes, backslashes, a
+    '\\u0041' escape, Spark's '${x}' variable syntax, newlines, the
+    '</w>' marker as text) pass through the merge fold as data: the
+    merge table equals the pure-Python reference."""
+
+    class _T:
+        pass
+
+    _T.documents = spark.createDataFrame([(0, corpus)], "doc_id bigint, text string")
+    freqs: dict = {}
+    for w in corpus.split(" "):
+        if w:
+            freqs[w] = freqs.get(w, 0) + 1
+
+    from base_etl_spark.registry import REGISTRY
+
+    got = [
+        (r.merge_rank, r.left_sym, r.right_sym, r.merged, r.pair_count)
+        for r in sorted(
+            REGISTRY["tokenizer_bpe_train"].fn.tables_fn(_T()).collect(),
+            key=lambda r: r.merge_rank,
+        )
+    ]
+    want = _ref_bpe(freqs, 8)
+    assert "${x}" in {m[3] for m in want}
+    assert got == want, got
 
 
 def test_bpe_train_matches_reference_fixture(spark):
