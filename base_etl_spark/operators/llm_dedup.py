@@ -289,16 +289,19 @@ def bucket_pairs(
     pre-collapse (dedup_near_minhash) removes the identical-text cause;
     what remains above the cap is reported, not exploded. cap=None
     disables the guard (property tests compare against naive all-pairs)."""
-    # r12 (guide §2.3 — narrower shuffle keys): the bucket exchange keys
-    # on ONE 64-bit fuse of (band, bh) instead of the (int, long) pair —
-    # 20 % fewer key bytes per row and single-column hashing. Bucket
-    # identity changes only on a cross-band xxhash64 collision
-    # (P ~ 2^-64 per bucket pair); a collision can only MERGE two
-    # buckets, i.e. add candidates, and every candidate is exact-verified
-    # downstream, so the declared outputs are unchanged (re-proven vs
-    # the exact-Jaccard oracle at 3 SFs). bucket_overflow and
-    # dedup_bucket_stats keep the explicit (band, bh) grain — they
-    # REPORT buckets per band and never shuffle doc-pair volumes.
+    # The bucket exchange keys on ONE 64-bit fuse of (band, bh) instead
+    # of the (int, long) pair — 20 % fewer key bytes per row and
+    # single-column hashing. Bucket identity changes only on a
+    # cross-band xxhash64 collision (P ~ 2^-64 per bucket pair), which
+    # MERGES two buckets. Under the cap that only adds candidates, and
+    # every candidate is exact-verified downstream. But two buckets that
+    # are each under the cap can merge into one over it, which the cap
+    # filter below then skips, dropping their pairs. That case is
+    # counted by this fused-grain ``lsh_bucket_overflow``
+    # ``overflow_buckets`` observe, NOT by the (band, bh)-grain
+    # ``bucket_overflow`` frame (nor dedup_bucket_stats), which see two
+    # under-cap buckets. Those two keep the explicit (band, bh) grain —
+    # they REPORT buckets per band and never shuffle doc-pair volumes.
     buckets = (
         banded.groupBy(F.xxhash64("band", "bh").alias("bkey"))
         # collect_set, not collect_list: a duplicate (id, band, bh) row

@@ -9,6 +9,10 @@ Usage::
         return t.lineitem...
 
 Keys with ``oracle=None`` are rows-only checks (SURVEY §2 'R' rows).
+
+``queries()`` and ``oracle_sql()`` return keys in registration order:
+operator modules in ``base_etl_spark.operators`` import order, then
+declaration order within each module.
 """
 
 from __future__ import annotations
@@ -60,326 +64,11 @@ def _ensure_loaded() -> None:
     import base_etl_spark.operators  # noqa: F401
 
 
-# The driver's correctness harness evaluates the FIRST 50 keys of
-# queries() iteration order (measured rounds 1-3: each CORRECTNESS file
-# covered exactly list(queries())[:50]). Registration order follows module
-# import order, which is an accident of file naming — so the
-# externally-visible order is pinned here instead. Keys listed below come
-# first (in list order); anything unlisted follows in registration order.
-#
-# Round-5 window (exactly 50): executes the rotation plan written in
-# round 4 — all 50 keys below have NEVER had a driver CORRECTNESS row
-# (cumulative driver union after r4: 148 of the 270 now registered —
-#  mm_video_frames joined the registry this round; each key below carries only
-# local strict-gate evidence: sf0.001 pytest hash checks + the
-# sf0.01/sf0.1 tools/check.py sweeps). Priority order follows the r4
-# VERDICT: the round-4 additions a user is likeliest to lean on first
-# (TPC-H completions, media codecs, Python datasource, JSON/variant,
-# geo/fuzzy joins, ETL governance, the corpus capstone), then the
-# analytics.py suite — the oldest local-gate-only evidence in the repo.
-# The two analytics R keys (sketch_hll_rollup/overlap) are deferred to
-# round 6 so every slot this round buys a full hash-verified row where
-# one exists. Keys rotated OUT keep their local-gate coverage; after
-# this round the driver-verified union is >=198/270.
-#
-# ROUND-6 / ROUND-7 ROTATION PLAN — now CODE, not prose (the r4 verdict
-# called rotation drift the single biggest per-round risk). The windows
-# below were computed mechanically at the end of round 5 as
-# registry-minus-driver-union-minus-the-r5-window (72 keys: 62 D + 10 R);
-# tests/test_rotation_plan.py re-derives that arithmetic from the
-# committed CORRECTNESS_r0*.json files every pytest run, so a key
-# rename, a new key, or an accidental overlap breaks the suite LONG
-# before a driver snapshot is wasted on a re-check.
-#
-# At the START of round 6 the entire rotation is one line:
-#     DRIVER_PRIORITY = list(ROUND6_WINDOW)
-# and at the start of round 7:
-#     DRIVER_PRIORITY = list(ROUND7_WINDOW)
-# Keys added after this plan was computed must be appended to
-# ROUND7_WINDOW (or a round-8 spillover) at rotation time — the
-# partition test will fail loudly until they are placed.
-
-# Exactly 50 D keys, none with a driver row through round 5. The 12 D
-# deferred to round 7 are judge-verified at sf0.01 already (secondary
-# evidence) or trivial set-op/surface variants, so every round-6 slot
-# buys a key whose only evidence is the local gate.
-ROUND6_WINDOW: list[str] = [
-    "supplier_scorecard", "agg_mode", "agg_filter_clause",
-    "agg_regression", "agg_mean_family", "agg_top_percentile_share",
-    "agg_hhi", "agg_chi_square", "agg_trimmed_mean", "agg_boxplot_stats",
-    "agg_crosstab", "orders_size_histogram", "win_rank_delta",
-    "events_autocorr", "events_stickiness", "text_zipf_fit",
-    "events_attribution", "orders_repeat_rate", "events_session_stats",
-    "orders_fulfillment_lag", "text_unigram_nll", "text_repetition",
-    "text_pii_scrub", "text_ngram_topk", "text_js_divergence",
-    "text_entropy_char", "text_keywords_topk", "text_readability",
-    "text_vocab_overlap", "text_boilerplate_spans", "text_code_detect",
-    "text_langid_confusion", "text_contamination", "etl_train_split",
-    "sample_exact_k", "pack_sequences", "corpus_mix_weights",
-    "etl_split_leakage", "embedding_quantize", "embedding_qa",
-    "array_hof", "str_try_parse", "date_timezone",
-    "json_struct_roundtrip", "str_mask_pii", "date_business_days",
-    "array_explode_outer", "stream_topk_windowed",
-    "stream_sliding_distinct", "win_rolling_median",
-]
-
-# The round-7 window: the 22 keys left over from the original plan
-# (12 D + all 10 R) plus the 17 keys registered during round 6, appended
-# per the rotation rule (new keys join ROUND7_WINDOW at registration
-# time). 39 entries as of the round-7 rotation; the driver checks the
-# first 50, so up to 11 keys added in round 7 can still land a row this
-# round by being appended here at registration time.
-ROUND7_WINDOW: list[str] = [
-    "agg_pivot_native", "orders_cohort_ltv", "events_ab_cuped",
-    "dedup_cluster_sizes", "sim_range_search", "text_bigram_nll",
-    "win_ntile", "udaf_arrow_group", "set_intersect_all",
-    "set_except_all", "events_histogram", "udf_arrow",
-    "sketch_hll_rollup", "sketch_hll_overlap", "dedup_minhash_estimate",
-    "text_compress_ratio", "agg_freq_items", "graph_pagerank",
-    "cluster_kmeans", "sim_mmr_rerank", "udtf_python", "etl_file_stats",
-    "dedup_threshold_sweep", "embedding_dim_stats", "sample_weighted",
-    "events_ks_test", "sketch_cms_freq", "embedding_centroid_drift",
-    "agg_mutual_info", "graph_triangle_count", "mm_image_dedup",
-    "join_bloom_prefilter", "scan_xml_agg", "sim_topk_bitsign",
-    "agg_benford_test", "events_changepoint", "events_cohort_survival",
-    "events_ohlc_hourly", "text_hashing_tf",
-    # round-7 additions (appended at registration time per the rule;
-    # the window stays ≤50 so every entry lands a driver row this round)
-    "join_asof_nearest", "win_drawdown", "tokenizer_bpe_pairs",
-    "text_pmi_cooccur", "etl_backfill_plan", "graph_jaccard_similarity",
-    "mm_audio_silence_trim", "mm_video_scene_cut", "scan_json_permissive",
-    "sim_recall_at_k", "events_welch_ttest",
-]
-
-# Round-8 spillover: keys registered AFTER ROUND7_WINDOW reached the
-# driver's 50 slots (3 at the first round-7 snapshot + 20 from the
-# round-7 continuation session). They carry the full local gate now and
-# land their driver rows next round (round-8 rotation: DRIVER_PRIORITY =
-# list(ROUND8_WINDOW) — pad the remaining slots with re-checks of the
-# oldest driver rows if still short of 50 at rotation time).
-ROUND8_WINDOW: list[str] = [
-    "win_holt_linear", "dedup_url_canonical", "embedding_pca_power",
-    "dedup_spans", "tokenizer_bpe_train", "events_wilson_ci",
-    "etl_partition_skew_report", "sim_pq_quantize",
-    "win_seasonal_decompose", "mm_image_neardup",
-    "stream_interval_join", "events_quantile_treatment_effect",
-    "graph_degree_distribution", "tokenizer_bpe_apply",
-    "stream_interval_join_outer", "sim_topk_pq",
-    "etl_incremental_dedup", "dedup_exact_normalized",
-    "dedup_span_scrub", "udtf_arrow_chunks", "mm_audio_resample",
-    "sim_recall_matryoshka", "win_ewma_time_decay",
-    "dedup_funnel_report", "etl_scd3",
-    # round-8 additions (appended at registration time per the rule;
-    # the window stays <=50 so every entry lands a driver row this round)
-    "win_percent_rank_cume", "graph_assortativity", "events_interarrival",
-    "etl_late_arriving_dim", "mm_audio_gain_normalize",
-    "dedup_bucket_stats", "sketch_kmv_distinct", "sim_cosine_histogram",
-    "sim_topk_ivfpq", "mm_image_phash", "text_chunk_overlap",
-    "etl_subject_access_export", "etl_fk_orphan_audit",
-    "mm_video_frame_dedup", "etl_split_cluster_safe",
-    "sample_repeat_plan", "agg_grouping_id",
-    # round-8 continuation session (window fills to exactly 50 here;
-    # further keys spill to ROUND9_WINDOW)
-    "events_mann_whitney", "agg_theil_index", "win_gaps_islands",
-    "win_rolling_corr", "etl_psi_drift", "agg_winsorized_mean",
-    "text_burstiness", "sim_silhouette_label",
-]
-
-# Round-9 spillover: keys registered after ROUND8_WINDOW reached the
-# driver's 50 slots. Full local gate now; driver rows next round
-# (round-9 rotation: DRIVER_PRIORITY = list(ROUND9_WINDOW), padded with
-# re-checks of the oldest driver rows if short of 50 at rotation time).
-ROUND9_WINDOW: list[str] = [
-    "mm_image_crop_center", "graph_k_core", "dedup_prefix_cluster",
-    "win_mtd_cumulative", "text_ngram_novelty", "sim_mrr_at_k",
-    "etl_ttl_expiry_plan", "agg_decile_lift", "dedup_source_matrix",
-    "events_power_sample_size", "agg_revenue_waterfall",
-    "sample_poisson_bootstrap", "win_locf_fill", "events_ratio_metric_ci",
-    "etl_duplicate_payment_audit", "text_heaps_law", "agg_observe_metrics",
-    "agg_bitmap_distinct", "sql_pipe_syntax", "join_merge_hint",
-    "events_funnel_time_gated", "etl_reconciliation_gate",
-    "agg_skyline_2d", "mm_video_fps_downsample", "events_diff_in_diff",
-    "events_propensity_stratified_ate", "dedup_quality_survivor",
-    "orders_mix_shift_decomposition", "sample_class_balanced",
-    "embedding_outlier_zdist",
-    # round-9 additions (appended at registration time; 20 free slots
-    # remained when the rotation landed, so these claim driver slots
-    # ahead of the oldest-row re-check padding)
-    "sim_pq_distortion", "agg_decile_lift_approx",
-    "sql_recursive_cte", "sql_execute_immediate", "agg_listagg",
-    "agg_corr_matrix", "agg_hll_native", "agg_approx_top_k",
-    "etl_zorder_cluster", "mm_audio_spectral_centroid",
-    "graph_components", "mm_image_quality_stats",
-    "sort_global_rank_two_phase", "events_markov_stationary",
-    "udf_pandas_iter", "orders_xyz_variability", "date_fiscal_445",
-    # window fills to exactly 50 here; further round-9 keys would spill
-    # to a ROUND10_WINDOW
-    "sim_ndcg_at_k", "events_qini_uplift", "sim_ivf_nprobe_sweep",
-]
-
-# Round 10: every registry key now has at least one driver row
-# (cumulative union after r9 = all 398 keys), so this round's window is
-# re-check-led by design — the r9 VERDICT task 1. Three tiers:
-#
-# 1. ROUND10_RECHECK — keys whose IMPLEMENTATION changed after their
-#    last driver row: the five f71c7ac (collapsed label propagation /
-#    minhash collapse gate) keys, plus the three keys touched by this
-#    round's ADVICE fixes (sort_global_rank_two_phase localCheckpoint
-#    pinning; udf_pandas_iter rounding convention; graph_components via
-#    the data-sized _propagate_min_labels cap). Their driver rows must
-#    be POST-change.
-# 2. Keys registered during round 10 (appended at registration time,
-#    ahead of the padding so each lands a first driver row this round).
-# 3. ROUND10_PAD — refresh of the OLDEST driver evidence in the repo:
-#    the 46 keys whose last row is CORRECTNESS_r02 (r2-era windows/
-#    sorts/sets/streams/UDF-surfaces), in their r02 record order. Any
-#    overflow past the driver's 50 slots simply isn't sampled.
-#
-# tests/test_rotation_plan.py binds the deliberate re-checks to this
-# declared list — an UNDECLARED re-check (rotation drift) still fails.
-ROUND10_RECHECK: list[str] = [
-    # f71c7ac: collapsed propagation + gated minhash pre-collapse
-    "dedup_clusters", "dedup_cluster_sizes", "etl_split_cluster_safe",
-    "dedup_quality_survivor", "dedup_near_minhash",
-    # round-10 ADVICE fixes (post-change rows needed)
-    "graph_components", "sort_global_rank_two_phase", "udf_pandas_iter",
-]
-
-ROUND10_NEW: list[str] = [
-    # keys registered during round 10 — appended here at registration
-    # time per the standing rotation rule
-    "selfcheck_battery", "mm_image_png_decode", "etl_vacuum_orphan_plan",
-]
-
-ROUND10_PAD: list[str] = [
-    "win_topk_per_group", "win_rank_dense", "win_lag_lead",
-    "win_moving_avg", "win_range_frame", "win_distribution",
-    "win_first_last", "topk_orders", "sort_multikey", "limit_offset",
-    "set_union_all", "set_union_distinct", "set_intersect", "set_except",
-    "agg_unpivot", "stream_tumbling", "stream_sliding", "stream_session",
-    "stream_dedup", "stream_late_data", "stream_stateful",
-    "udaf_entropy", "udaf_entropy_pandas", "udf_pandas", "udf_scalar",
-    "udtf_explode", "map_funcs", "str_fuzzy", "join_scalar_subquery",
-    "sim_topk_blocked", "mm_binary_features", "etl_profile",
-    "text_fingerprint", "dedup_embedding", "etl_corpus_clean",
-    "rollup_multigrain", "sample_stratified", "events_funnel",
-    "text_langid_ngram", "agg_argmax", "etl_dq_checks",
-    "etl_cohort_retention", "agg_salted", "rollup_incremental",
-    "win_running_distinct", "agg_pricing",
-]
-
-# Round 11 (r10 VERDICT task 3): rotate the window to the 57 keys whose
-# latest driver row is still CORRECTNESS_r02/r03 — the oldest evidence
-# in the repo. Same three-tier shape as round 10:
-#
-# 1. ROUND11_RECHECK — implementation changed post-row this round:
-#    selfcheck_battery (the _chk_kmv exact/estimate boundary now imports
-#    _KMV_K from analytics.py instead of a hardcoded 256 — r10 ADVICE).
-# 2. ROUND11_NEW — keys registered during round 11, appended at
-#    registration time (first driver rows).
-# 3. ROUND11_PAD — the 7 keys whose latest row is r02 (the round-10 pad
-#    overflow, in their r02 record order) then the first 41 of the 50
-#    r03-latest keys in their r03 record order. 2 + 1 + 48 = 51 listed;
-#    the driver samples the first 50, so the last pad key (sim_topk)
-#    spills to round 12 beside the 9 r03 keys already queued
-#    (sim_topk_ivf, sim_cluster_stats, multimodal_join, text_wordcount,
-#    text_tfidf, text_stats, text_langid, text_quality, text_tokens) —
-#    47 of the 57 stale keys refresh this round.
-ROUND11_RECHECK: list[str] = [
-    "selfcheck_battery",  # _chk_kmv boundary constant now shared
-    # drift-triage memo of the collapse-gate scalar (snapshot-statistic
-    # cache on the documents frame) — driver row must be post-change
-    "dedup_near_minhash",
-]
-
-ROUND11_NEW: list[str] = [
-    # keys registered during round 11 — appended here at registration
-    # time per the standing rotation rule
-    "sink_ledger_census",
-]
-
-ROUND11_PAD: list[str] = [
-    # latest row r02 (round-10 pad overflow), r02 record order
-    "agg_argmax", "etl_dq_checks", "etl_cohort_retention", "agg_salted",
-    "rollup_incremental", "win_running_distinct", "agg_pricing",
-    # latest row r03, r03 record order (first 41 of 50)
-    "json_extract", "etl_scd2", "scan_csv_agg", "scan_json_agg",
-    "scan_parquet", "proj_revenue", "filter_complex", "join_inner_bcast",
-    "join_shuffle", "join_left_outer", "join_full_outer", "join_semi",
-    "join_anti", "join_cross", "join_theta_range", "join_asof",
-    "join_star_q5", "join_range_bucketized", "agg_count_distinct",
-    "agg_approx_distinct", "agg_having", "agg_rollup", "agg_cube",
-    "agg_grouping_sets", "agg_pivot_casewhen", "agg_distinct_rows",
-    "agg_percentiles", "agg_approx_quantile", "str_funcs", "str_regexp",
-    "str_split_explode", "date_funcs", "math_funcs", "cond_funcs",
-    "cast_funcs", "array_funcs", "array_agg", "dedup_exact",
-    "dedup_near_jaccard", "dedup_simhash", "sim_topk",
-]
-
-# Round 12 (r11 VERDICT task 5): finish the r03 rotation, then start on
-# the r04-stale majority. Same three-tier shape:
-#
-# 1. ROUND12_RECHECK — implementation changed this round (r12 batched
-#    BPE merges; selfcheck_battery pool sizing): driver rows must be
-#    post-change.
-# 2. ROUND12_NEW — none (optimization round, no new keys).
-# 3. ROUND12_PAD — the 10 keys whose latest row is still r03 (the full
-#    remainder of the r02/r03-stale backlog: the r11 spillover sim_topk
-#    plus the 9 queued r03 keys), then the r04-latest keys in their
-#    CORRECTNESS_r04 record order. 11 + 47 = 58 listed; the driver
-#    samples the first 50, so the last 8 r04 keys spill to round 13's
-#    pad together with the 13 never-listed r04 keys.
-ROUND12_RECHECK: list[str] = [
-    "tokenizer_bpe_train",   # r12 batched merges (_pick_merge_batch)
-    "tokenizer_bpe_apply",   # consumes the batched trainer's vocab
-    "selfcheck_battery",     # pool width now session-derived
-    # r12 double-hop _propagate_min_labels (results fixpoint-identical,
-    # hash-proven 3 SFs — rows must still be post-change):
-    "dedup_clusters", "dedup_cluster_sizes", "dedup_quality_survivor",
-    "dedup_source_matrix", "etl_split_cluster_safe", "graph_components",
-    # r12 fused 64-bit LSH bucket key (bucket_pairs):
-    "dedup_near_minhash", "dedup_embedding",
-]
-
-ROUND12_NEW: list[str] = []
-
-ROUND12_PAD: list[str] = [
-    # latest row r03 (the last of the r02/r03-stale backlog)
-    "sim_topk", "text_wordcount", "text_tfidf", "text_stats",
-    "text_langid", "text_quality", "text_tokens", "sim_cluster_stats",
-    "multimodal_join", "sim_topk_ivf",
-    # latest row r04, CORRECTNESS_r04 record order (first 37 of 50)
-    "dedup_containment", "text_bm25", "join_skew_salted",
-    "join_asof_tolerance", "join_q10_returns", "join_q7_volume",
-    "join_null_safe", "join_lateral_topn", "join_shuffle_hash_hint",
-    "join_disjunctive_keys", "join_interval_overlap", "join_asof_forward",
-    "sim_knn_classify", "sim_hybrid_rrf", "sim_topk_ip",
-    "join_q2_min_supplier", "join_q4_priority_exists",
-    "join_q8_market_share", "join_q9_profit", "agg_q12_priority_class",
-    "agg_q14_promo_ratio", "join_q15_top_supplier", "agg_q16_part_variety",
-    "join_q17_small_qty", "join_q18_large_orders", "filter_q19_disjunctive",
-    "join_q20_excess_share", "join_q21_waiting", "join_q22_idle_customers",
-    "agg_q6_forecast", "scan_partitioned_pruned", "join_bucketed_colocated",
-    "join_dpp_runtime", "etl_compaction", "scan_schema_evolution",
-    "etl_forget_users", "etl_cluster_by_date",
-]
-
-DRIVER_PRIORITY: list[str] = ROUND12_RECHECK + ROUND12_NEW + ROUND12_PAD
-
-
-def _ordered() -> list[str]:
-    listed = [k for k in DRIVER_PRIORITY if k in REGISTRY]
-    rest = [k for k in REGISTRY if k not in DRIVER_PRIORITY]
-    return listed + rest
-
-
 def queries() -> dict[str, QueryFn]:
     _ensure_loaded()
-    return {k: REGISTRY[k].fn for k in _ordered()}
+    return {k: s.fn for k, s in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     _ensure_loaded()
-    return {
-        k: REGISTRY[k].oracle for k in _ordered() if REGISTRY[k].oracle is not None
-    }
+    return {k: s.oracle for k, s in REGISTRY.items() if s.oracle is not None}

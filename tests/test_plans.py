@@ -3,6 +3,7 @@ defeat Catalyst. These read explain() output, not results."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from base_etl_spark import queries
@@ -149,7 +150,13 @@ def test_sample_stratified_prunes_text_column(spark):
     assert "ReadSchema: struct<doc_id:bigint,lang:string,source:string>" in plan
 
 
-def test_no_accidental_cartesian_in_any_key(spark):
+@pytest.fixture(scope="module")
+def all_plans(spark) -> dict[str, str]:
+    """Every key's formatted plan, built once for the registry-wide audits."""
+    return {k: _plan(fn(spark, SF_TEST)) for k, fn in _QS.items()}
+
+
+def test_no_accidental_cartesian_in_any_key(all_plans):
     """Repo-wide plan audit: no key's plan may contain a cartesian
     product, and nested-loop joins may appear ONLY where a bounded side
     makes them the intended plan (scalar subqueries, the deliberate
@@ -223,8 +230,7 @@ def test_no_accidental_cartesian_in_any_key(spark):
         "sim_ivf_nprobe_sweep",  # probe x centroid shortlist per sweep point (sim_topk_ivfpq shape)
     }
     bad = []
-    for k, fn in _QS.items():
-        plan = _plan(fn(spark, SF_TEST))
+    for k, plan in all_plans.items():
         if "CartesianProduct" in plan:
             bad.append((k, "CartesianProduct"))
         if "BroadcastNestedLoopJoin" in plan and k not in allowed_nested:
@@ -232,7 +238,7 @@ def test_no_accidental_cartesian_in_any_key(spark):
     assert not bad, bad
 
 
-def test_python_eval_only_in_declared_udf_surface(spark):
+def test_python_eval_only_in_declared_udf_surface(all_plans):
     """'UDFs are the slow path': Python evaluation nodes may appear ONLY
     in the keys whose PURPOSE is the Python boundary. Every other
     operator must stay JVM-side end to end."""
@@ -277,8 +283,7 @@ def test_python_eval_only_in_declared_udf_surface(spark):
         "FlatMapGroupsInArrow",
     )
     bad = []
-    for k, fn in _QS.items():
-        plan = _plan(fn(spark, SF_TEST))
+    for k, plan in all_plans.items():
         found = [m for m in markers if m in plan]
         if found and k not in allowed:
             bad.append((k, found))

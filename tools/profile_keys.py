@@ -1,15 +1,14 @@
-"""Round-11 measurement harness (guide §1: measure first).
+"""Per-key timing and plan dumps.
 
 Times registry keys at $SPARK_GRAFT_SF_DIR (default sf0.1) through the
-noop sink and optionally dumps .explain("formatted") output to
-plans/r11/. Produces the per-operator measured table OPTIMIZATION_r11.md
-is built from.
+noop sink (best of --runs), or writes each headline key's
+.explain("formatted") output into a directory.
 
 Usage:
-    python tools/profile_r11.py --keys q1 q3 ...      # bench-name or registry-key
-    python tools/profile_r11.py --all                 # every registry key, 1 run each
-    python tools/profile_r11.py --plans before        # dump headline plans to plans/r11/*_before.txt
-    python tools/profile_r11.py --runs 3              # best-of-N for --keys
+    python tools/profile_keys.py --keys q1 q3 ...      # bench-name or registry-key
+    python tools/profile_keys.py --all                 # every registry key
+    python tools/profile_keys.py --plans plans/before  # headline plans -> plans/before/<bench key>.txt
+    python tools/profile_keys.py --runs 3              # best-of-N for --keys
 """
 
 from __future__ import annotations
@@ -23,7 +22,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
@@ -31,7 +29,8 @@ def main() -> None:
     ap.add_argument("--keys", nargs="*", default=[])
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--plans", choices=["before", "after"], default=None)
+    ap.add_argument("--plans", metavar="DIR", default=None,
+                    help="write headline plans into DIR instead of timing")
     ap.add_argument("--out", default=None, help="write JSON results here")
     args = ap.parse_args()
 
@@ -39,52 +38,43 @@ def main() -> None:
     from bench import HEADLINE
 
     spark = build_session(
-        "profile_r11", extra_conf={"spark.ui.showConsoleProgress": "false"}
+        "profile", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
     spark.sparkContext.setLogLevel("ERROR")
     qs = queries()
 
-    # resolve bench names to registry keys
-    def resolve(name: str) -> tuple[str, str]:
-        if name in HEADLINE:
-            return name, HEADLINE[name]
-        return name, name
-
     if args.plans:
-        os.makedirs(os.path.join(REPO, "plans", "r11"), exist_ok=True)
+        os.makedirs(args.plans, exist_ok=True)
         for bname, key in HEADLINE.items():
             df = qs[key](spark, SF_DIR)
             txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            path = os.path.join(REPO, "plans", "r11", f"{bname}_{args.plans}.txt")
+            path = os.path.join(args.plans, f"{bname}.txt")
             with open(path, "w") as f:
                 f.write(f"# {bname} ({key}) explain(formatted) @ {SF_DIR}\n")
                 f.write(txt)
             print(f"wrote {path}", file=sys.stderr)
         return
 
-    names = list(HEADLINE) if not (args.keys or args.all) else args.keys
-    if args.all:
-        names = list(qs)
-
+    names = list(qs) if args.all else (args.keys or list(HEADLINE))
     results: dict[str, float] = {}
     for name in names:
-        bname, key = resolve(name)
+        key = HEADLINE.get(name, name)  # bench names resolve to registry keys
         if key not in qs:
             print(f"!! unknown key {name}", file=sys.stderr)
             continue
         fn = qs[key]
-        spark.sparkContext.setJobDescription(f"profile:{bname}")
+        spark.sparkContext.setJobDescription(f"profile:{name}")
         attempts = []
         for _ in range(args.runs):
             t0 = time.time()
             execute_fully(fn(spark, SF_DIR))
             attempts.append(time.time() - t0)
         spark.sparkContext.setJobDescription(None)
-        results[bname] = round(min(attempts), 3)
+        results[name] = round(min(attempts), 3)
         print(
-            f"# {bname} ({key}): best {results[bname]}s of {[round(a, 3) for a in attempts]}",
+            f"# {name} ({key}): best {results[name]}s of {[round(a, 3) for a in attempts]}",
             file=sys.stderr,
         )
     total = round(sum(results.values()), 3)

@@ -1,20 +1,20 @@
-"""Record local baseline anchors for bench queries with no BASELINE.md row.
+"""Record local baseline anchors for bench headline keys.
 
-The round-5 verdict flagged that five bench headliners (sim_topk,
-dedup_minhash, q9_profit, q21_waiting, hybrid_rrf) had no "within 2x"
-anchor, making the bench gate unfalsifiable for them. This tool measures,
-on this machine at sf0.1, the same two columns the original baseline
-table records:
+Measures, on this machine at sf0.1, the same two columns the original
+BASELINE.md table records:
 
 - **DuckDB**: the key's oracle SQL (the cost of the answer in the
-  in-process OLAP engine — a floor, not the gate).
+  in-process OLAP engine — a floor, not the gate). Rows-only keys have
+  no oracle, so their DuckDB column is n/a.
 - **PySpark first-cut**: the engine's query body under a STOCK session
   (shuffle.partitions=8, default 10 MB autoBroadcastJoinThreshold, AQE
   defaults) — the same untuned configuration the original first-cut
   rows used, isolating what the session tuning buys.
 
 Prints a markdown table row per key (cold + warm) to paste into
-BASELINE.md. Usage: python tools/record_baselines.py [--sf DIR]
+BASELINE.md. Usage:
+    python tools/record_baselines.py [--sf DIR] [--keys q9_profit bpe_train ...]
+--keys takes bench.HEADLINE names; the default is every headline key.
 """
 
 from __future__ import annotations
@@ -27,80 +27,17 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-KEYS = [
-    ("sim_topk", "sim_topk"),
-    ("dedup_minhash", "dedup_near_minhash"),
-    ("q9_profit", "join_q9_profit"),
-    ("q21_waiting", "join_q21_waiting"),
-    ("hybrid_rrf", "sim_hybrid_rrf"),
-]
-
-# round-8 additions (r7 VERDICT task 5): heaviest new LLM capstones.
-# tokenizer_bpe_train is an R key (no oracle) — the DuckDB column is
-# n/a for it; the anchor is the stock-session PySpark warm number.
-KEYS_R8 = [
-    ("dedup_spans", "dedup_spans"),
-    ("bpe_train", "tokenizer_bpe_train"),
-    ("matryoshka", "sim_recall_matryoshka"),
-]
-
-# round-8 continuation additions: the heaviest shapes of the session —
-# the cross-source pair-tier rollup, the vocab^3 gram-attribution pass,
-# and the corpus x centroid geometry scan.
-KEYS_R8C = [
-    ("source_matrix", "dedup_source_matrix"),
-    ("ngram_novelty", "text_ngram_novelty"),
-    ("silhouette", "sim_silhouette_label"),
-]
-
-# round-9 additions (r8 VERDICT task 5): the heaviest ROUND9_WINDOW
-# shapes still without a 2x-gate anchor — the cluster-survivor policy
-# (now on collapsed propagation), the global-ntile lift table, the
-# two-codec-trip video kernel, and the multi-fact reconciliation gate.
-KEYS_R9 = [
-    ("quality_survivor", "dedup_quality_survivor"),
-    ("decile_lift", "agg_decile_lift"),
-    ("fps_downsample", "mm_video_fps_downsample"),
-    ("reconciliation", "etl_reconciliation_gate"),
-]
-
-# round-10/11 additions (r10 VERDICT task 4): mm_image_png_decode is
-# the heaviest r10 kernel (x100 amplification 7.26x — the largest in
-# the r10 table) and had no anchor, making the 2x gate unfalsifiable
-# for it; sink_ledger_census is the r11 exactly-once sink census,
-# anchored at birth so it never ships unfalsifiable.
-KEYS_R10 = [
-    ("png_decode", "mm_image_png_decode"),
-    ("ledger_census", "sink_ledger_census"),
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument(
-        "--r8", action="store_true",
-        help="measure the round-8 capstone keys instead of the r6 five",
-    )
-    ap.add_argument(
-        "--r8c", action="store_true",
-        help="measure the round-8 continuation capstones",
-    )
-    ap.add_argument(
-        "--r9", action="store_true",
-        help="measure the round-9 unanchored heavies",
-    )
-    ap.add_argument(
-        "--r10", action="store_true",
-        help="measure the round-10/11 unanchored heavies",
+        "--keys", nargs="+", choices=list(HEADLINE), default=list(HEADLINE),
+        metavar="NAME", help="bench.HEADLINE names (default: all)",
     )
     args = ap.parse_args()
-    keys = (
-        KEYS_R10 if args.r10
-        else KEYS_R9 if args.r9
-        else KEYS_R8C if args.r8c
-        else (KEYS_R8 if args.r8 else KEYS)
-    )
 
     import duckdb
 
@@ -126,7 +63,8 @@ def main() -> None:
 
     print("| bench key | registry key | DuckDB | PySpark cold | PySpark warm | rows out |")
     print("|---|---|---:|---:|---:|---:|")
-    for bench_key, reg_key in keys:
+    for bench_key in args.keys:
+        reg_key = HEADLINE[bench_key]
         dt = []
         for _ in range(2):
             if reg_key not in osql:  # R key: no oracle, no DuckDB column
