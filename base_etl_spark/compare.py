@@ -1,6 +1,10 @@
 """Result-set comparison used by tools/check.py and the pytest oracle
 layer — a faithful local replica of the driver's correctness gate.
 
+``check_key`` is the one judgement every sweep and oracle test makes: run
+a key on Spark, run its oracle SQL on an ``oracle_con`` connection over
+the same parquet, and compare with ``compare_strict``.
+
 The driver materializes BOTH result sets through pandas before hashing,
 which is stricter than naive python-tuple equality in two ways that each
 cost a red row in a past round:
@@ -24,9 +28,15 @@ from __future__ import annotations
 import datetime as dt
 import decimal
 import math
+import os
+from dataclasses import dataclass
 
+import duckdb
 import numpy as np
 import pandas as pd
+
+from base_etl_spark.registry import oracle_sql, queries
+from base_etl_spark.schemas import TABLE_NAMES
 
 
 def spark_to_pandas(cols: list[str], rows: list[tuple]) -> pd.DataFrame:
@@ -111,3 +121,51 @@ def compare_strict(
             f"{len(diffs)} value diffs; first: {diffs[0] if diffs else '?'}"
         )
     return problems
+
+
+PASS, ROWS_ONLY, FAIL = "pass", "rows-only", "fail"
+
+
+@dataclass(frozen=True)
+class KeyCheck:
+    """One key's verdict. ``problems`` says why a FAIL failed: a Spark
+    error, an oracle error, or ``compare_strict``'s problems."""
+
+    status: str  # PASS, ROWS_ONLY or FAIL
+    problems: list[str]
+    cols: list[str]
+    rows: list[tuple]  # Spark's collected rows; empty when Spark raised
+    oracle: pd.DataFrame | None  # DuckDB's ``.df()``; None when not run
+
+
+def oracle_con(sf_dir: str):
+    """A DuckDB connection with one view per fixture table over the
+    parquet files in ``sf_dir``."""
+    con = duckdb.connect()
+    for name in TABLE_NAMES:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{path}'")
+    return con
+
+
+def check_key(spark, con, key: str, sf_dir: str) -> KeyCheck:
+    """Run ``key`` on Spark over ``sf_dir`` and, when it declares an
+    oracle, that SQL on ``con`` (an ``oracle_con`` over the same
+    directory), then compare the two with ``compare_strict``. A rows-only
+    key passes as ROWS_ONLY once its rows are collected without an
+    error."""
+    try:
+        sdf = queries()[key](spark, sf_dir)
+        cols = sdf.columns
+        rows = [tuple(r) for r in sdf.collect()]
+    except Exception as e:  # a sweep judges every key; report, don't stop
+        return KeyCheck(FAIL, [f"spark error: {type(e).__name__}: {e}"], [], [], None)
+    sql = oracle_sql().get(key)
+    if sql is None:
+        return KeyCheck(ROWS_ONLY, [], cols, rows, None)
+    try:
+        want = con.sql(sql).df()
+    except Exception as e:
+        return KeyCheck(FAIL, [f"oracle error: {type(e).__name__}: {e}"], cols, rows, None)
+    problems = compare_strict(cols, rows, want)
+    return KeyCheck(FAIL if problems else PASS, problems, cols, rows, want)

@@ -115,7 +115,7 @@ def graph_pagerank(t: Tables) -> DataFrame:
     return ranks.select("node", F.round("rank", 8).alias("rank"))
 
 
-# SQL fragment shared by the two KNN-graph oracles: DISTINCT
+# SQL fragment shared by the KNN-graph oracles: DISTINCT
 # (order, supplier) → same-order pair counts → symmetrize → top-5
 # nomination per node → undirected union-of-KNN edge set `e(u, v)` and
 # its degree table. Each oracle string embeds it so the DuckDB side
@@ -152,30 +152,14 @@ _KNN_EDGES_SQL = """
 """
 
 
-_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _knn_partnership_edges(t: Tables) -> DataFrame:
     """Undirected union-of-KNN supplier partnership edge set `(u, v)`,
-    u < v — the shared graph construction behind graph_triangle_count,
-    graph_jaccard_similarity and graph_degree_distribution (rationale in
-    graph_triangle_count's docstring: raw co-occurrence saturates to the
-    complete graph on uniform fixtures; per-order pair fan-out is
-    line-count-bounded; the 5-partner nomination is deterministic under
-    (w DESC, id)). Returned persisted — every caller reads it more than
-    once and it is tiny next to the fact scan.
-
-    Persisted ONCE per (session, sf_dir) via a module cache (ADVICE r7):
-    three keys call this helper, and re-persisting per call accumulated
-    orphaned cached partitions across repeated correctness sweeps —
-    identical lineage each time, so the cached frame is shared, not
-    recomputed. Hand-built test shims without sf_dir skip the cache
-    (tiny session-scoped frames)."""
-    sf_dir = getattr(t, "sf_dir", None)
-    spark = getattr(t, "spark", None) or t.lineitem.sparkSession
-    key = (spark, sf_dir)
-    if sf_dir is not None and key in _EDGE_CACHE:
-        return _EDGE_CACHE[key]
+    u < v — the shared graph construction behind the KNN-graph keys
+    (rationale in graph_triangle_count's docstring: raw co-occurrence
+    saturates to the complete graph on uniform fixtures; per-order pair
+    fan-out is line-count-bounded; the 5-partner nomination is
+    deterministic under (w DESC, id)). Never cached: every call plans
+    and computes its own edges instead of reading an earlier call's."""
     cs = t.lineitem.select(
         F.col("l_orderkey").alias("o"), F.col("l_suppkey").alias("s")
     ).distinct()
@@ -190,49 +174,26 @@ def _knn_partnership_edges(t: Tables) -> DataFrame:
     ).unionByName(pc.select(F.col("pv").alias("na"), F.col("pu").alias("nb"), "w"))
     knn_w = Window.partitionBy("na").orderBy(F.col("w").desc(), F.col("nb"))
     knn = direct.withColumn("rn", F.row_number().over(knn_w)).filter(F.col("rn") <= 5)
-    edges = (
-        knn.select(
-            F.least("na", "nb").alias("u"), F.greatest("na", "nb").alias("v")
-        )
-        .distinct()
-        .persist()  # feeds degrees AND downstream joins; tiny vs the fact scan
+    return knn.select(
+        F.least("na", "nb").alias("u"), F.greatest("na", "nb").alias("v")
+    ).distinct()
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """`(node, deg)` of an undirected `(u, v)` edge list: one hash agg
+    over both endpoint columns."""
+    return (
+        edges.select(F.col("u").alias("node"))
+        .unionByName(edges.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("deg"))
     )
-    if sf_dir is not None:
-        _EDGE_CACHE[key] = edges
-    return edges
 
 
 @query(
     "graph_triangle_count",
-    oracle="""
-    WITH cs AS (
-        SELECT DISTINCT l_orderkey AS o, l_suppkey AS s FROM lineitem
-    ),
-    pc AS (
-        SELECT a.s AS u, b.s AS v, count(*) AS w
-        FROM cs a JOIN cs b ON a.o = b.o AND a.s < b.s
-        GROUP BY a.s, b.s
-    ),
-    dir AS (
-        SELECT u AS a, v AS b, w FROM pc
-        UNION ALL
-        SELECT v AS a, u AS b, w FROM pc
-    ),
-    knn AS (
-        SELECT a, b FROM (
-            SELECT a, b,
-                   row_number() OVER (PARTITION BY a ORDER BY w DESC, b) AS rn
-            FROM dir
-        ) WHERE rn <= 5
-    ),
-    e AS (
-        SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v FROM knn
-    ),
-    deg AS (
-        SELECT node, count(*) AS deg
-        FROM (SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e)
-        GROUP BY node
-    ),
+    oracle=f"""
+    WITH {_KNN_EDGES_SQL},
     eo AS (
         SELECT CASE WHEN du.deg < dv.deg OR (du.deg = dv.deg AND e.u < e.v)
                     THEN e.u ELSE e.v END AS src,
@@ -306,12 +267,7 @@ def graph_triangle_count(t: Tables) -> DataFrame:
     arithmetic; the one float division is rounded to 6dp on both
     engines."""
     e = _knn_partnership_edges(t)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _degrees(e)
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
     u_first = (F.col("du") < F.col("dv")) | (
@@ -471,12 +427,7 @@ def graph_degree_distribution(t: Tables) -> DataFrame:
     partition-less but bounded by DISTINCT DEGREE count (≤ max degree,
     ~2k here; inline-bounded like the other post-aggregate grids)."""
     e = _knn_partnership_edges(t)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _degrees(e)
     hist = deg.groupBy("deg").agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
     # share window: runs over the degree HISTOGRAM (distinct degrees),
     # never node- or edge-sized input
@@ -528,12 +479,7 @@ def graph_assortativity(t: Tables) -> DataFrame:
     degree-capped (≤2k distinct nodes) at any scale: the fact table
     only feeds the edge construction's one distinct + one groupBy."""
     e = _knn_partnership_edges(t)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = _degrees(e)
     dd = e.select("u", "v").unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -594,13 +540,7 @@ def graph_k_core(t: Tables) -> DataFrame:
         cur = edges0
         rounds_used = 0
         while True:
-            deg = (
-                cur.select(F.col("u").alias("node"))
-                .unionByName(cur.select(F.col("v").alias("node")))
-                .groupBy("node")
-                .agg(F.count(F.lit(1)).alias("deg"))
-            )
-            bad = deg.filter(F.col("deg") < k).select("node")
+            bad = _degrees(cur).filter(F.col("deg") < k).select("node")
             n_bad = bad.count()
             if n_bad == 0:
                 break
@@ -638,30 +578,8 @@ def graph_k_core(t: Tables) -> DataFrame:
 
 @query(
     "graph_components",
-    oracle="""
-    WITH RECURSIVE cs AS (
-        SELECT DISTINCT l_orderkey AS o, l_suppkey AS s FROM lineitem
-    ),
-    pc AS (
-        SELECT a.s AS u, b.s AS v, count(*) AS w
-        FROM cs a JOIN cs b ON a.o = b.o AND a.s < b.s
-        GROUP BY a.s, b.s
-    ),
-    dir AS (
-        SELECT u AS a, v AS b, w FROM pc
-        UNION ALL
-        SELECT v AS a, u AS b, w FROM pc
-    ),
-    knn AS (
-        SELECT a, b FROM (
-            SELECT a, b,
-                   row_number() OVER (PARTITION BY a ORDER BY w DESC, b) AS rn
-            FROM dir
-        ) WHERE rn <= 5
-    ),
-    e AS (
-        SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v FROM knn
-    ),
+    oracle=f"""
+    WITH RECURSIVE {_KNN_EDGES_SQL},
     ed AS (
         SELECT u AS src, v AS dst FROM e
         UNION ALL

@@ -3,18 +3,12 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_TEST = "/root/testdata/sf0.001"  # fast unit-layer SF (SURVEY §5.4)
 SF_ORACLE = "/root/testdata/sf0.01"  # the driver's t2 SF
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 @pytest.fixture(scope="session")
@@ -39,9 +33,6 @@ def tables(spark):
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{SF_TEST}/{name}.parquet'"
-        )
-    return con
+    from base_etl_spark.compare import oracle_con
+
+    return oracle_con(SF_TEST)

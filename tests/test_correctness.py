@@ -7,8 +7,7 @@ import os
 
 import pytest
 
-from base_etl_spark import queries, oracle_sql
-from base_etl_spark.compare import compare_strict
+from base_etl_spark import compare, queries, oracle_sql
 from tests.conftest import SF_TEST
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -22,17 +21,15 @@ ROWS_ONLY = sorted(set(_QS) - set(_ORACLE))
 
 @pytest.mark.parametrize("key", DECLARED)
 def test_declared_matches_oracle(key, spark, duck):
-    sdf = _QS[key](spark, SF_TEST)
-    srows = [tuple(r) for r in sdf.collect()]
-    problems = compare_strict(sdf.columns, srows, duck.sql(_ORACLE[key]).df())
-    assert not problems, f"{key}: {problems}"
+    v = compare.check_key(spark, duck, key, SF_TEST)
+    assert v.status == compare.PASS, f"{key}: {v.problems}"
 
 
 @pytest.mark.parametrize("key", ROWS_ONLY)
-def test_rows_only_runs(key, spark):
-    df = _QS[key](spark, SF_TEST)
-    assert df.count() >= 0  # runs and has a stable schema
-    assert df.columns
+def test_rows_only_runs(key, spark, duck):
+    v = compare.check_key(spark, duck, key, SF_TEST)
+    assert v.status == compare.ROWS_ONLY, f"{key}: {v.problems}"
+    assert v.cols  # runs and has a stable schema
 
 
 def test_every_key_has_docstring():

@@ -1,7 +1,7 @@
-"""Empty-input regressions (round 5): tools/empty_check.py runs every key
-on 0-row tables (schema preserved from the sf0.001 footers) — the
-filter-eliminated-everything / empty-ingest-partition shape that the
-per-SF gates and the row-perturbing fuzzer can never produce.
+"""Empty-input regressions (round 5): ``tools/check.py --sf empty`` runs
+every key on 0-row tables (schema preserved from the sf0.001 footers) —
+the filter-eliminated-everything / empty-ingest-partition shape that the
+per-SF gates and the row-perturbing fuzz tiers can never produce.
 
 Its first sweep found 10 latent defects, every one a classic production
 failure class:
@@ -25,9 +25,10 @@ fixes stay pinned; the full-surface empty sweep remains a tools/ job.
 
 from __future__ import annotations
 
-import glob
-
 import pytest
+
+from base_etl_spark import compare
+from tools.tiers import TIERS
 
 FOUND_BY_EMPTY_SWEEP = [
     "etl_time_travel",
@@ -44,32 +45,13 @@ FOUND_BY_EMPTY_SWEEP = [
 
 @pytest.fixture(scope="module")
 def empty_sf():
-    from tools.empty_check import build_empty_dir
-
-    return build_empty_dir()
-
-
-@pytest.fixture(scope="module")
-def empty_duck(empty_sf):
-    import duckdb
-
-    con = duckdb.connect()
-    for p in glob.glob(f"{empty_sf}/*.parquet"):
-        name = p.split("/")[-1].removesuffix(".parquet")
-        con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{p}'")
-    return con
+    return TIERS["empty"]()
 
 
 @pytest.mark.parametrize("key", FOUND_BY_EMPTY_SWEEP)
-def test_empty_input_matches_oracle(key, spark, empty_sf, empty_duck):
-    from base_etl_spark import oracle_sql, queries
-    from base_etl_spark.compare import compare_strict
-
-    sdf = queries()[key](spark, empty_sf)
-    srows = [tuple(r) for r in sdf.collect()]
-    duck_df = empty_duck.sql(oracle_sql()[key]).df()
-    problems = compare_strict(sdf.columns, srows, duck_df)
-    assert not problems, f"{key}: {problems}"
+def test_empty_input_matches_oracle(key, spark, empty_sf):
+    v = compare.check_key(spark, compare.oracle_con(empty_sf), key, empty_sf)
+    assert v.status == compare.PASS, f"{key}: {v.problems}"
 
 
 def test_pagerank_empty_graph_is_empty(spark, empty_sf):
@@ -81,27 +63,12 @@ def test_pagerank_empty_graph_is_empty(spark, empty_sf):
 
 
 def test_win_distribution_single_row_percent_rank(spark):
-    """The one-row degenerate tier (tools/empty_check.py --one-row)
+    """The one-row degenerate tier (tools/check.py --sf one_row)
     found the closed form's n=1 hole: (rn-1)/(n-1) is 0/0, NULL under
     Spark's non-ANSI division, while SQL defines percent_rank of a lone
     row as 0.0 (DuckDB's native window function emits 0.0). Pin the
     special case driver-strict against the oracle on a 1-row table."""
-    from tools.empty_check import build_one_row_dir
-
-    import duckdb
-
-    from base_etl_spark import oracle_sql, queries
-    from base_etl_spark.compare import compare_strict
-
-    sf = build_one_row_dir()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE OR REPLACE VIEW customer AS SELECT * FROM '{sf}/customer.parquet'"
-    )
-    sdf = queries()["win_distribution"](spark, sf)
-    srows = [tuple(r) for r in sdf.collect()]
-    assert len(srows) == 1 and srows[0][2:] == (1, 0.0, 1.0)  # ntile, pct, cdist
-    problems = compare_strict(
-        sdf.columns, srows, con.sql(oracle_sql()["win_distribution"]).df()
-    )
-    assert not problems, problems
+    sf = TIERS["one_row"]()
+    v = compare.check_key(spark, compare.oracle_con(sf), "win_distribution", sf)
+    assert len(v.rows) == 1 and v.rows[0][2:] == (1, 0.0, 1.0)  # ntile, pct, cdist
+    assert v.status == compare.PASS, v.problems

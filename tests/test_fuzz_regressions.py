@@ -1,7 +1,8 @@
-"""Fuzz-harness regressions (round 5): tools/fuzz_check.py builds a
-perturbed copy of sf0.001 (short/unicode/boilerplate docs, exact-boundary
-session gaps, duplicate timestamps, hour-edge events, NULL-punched
-nullable columns) and compares every declared key driver-strict on it.
+"""Fuzz-tier regressions (round 5): ``tools/check.py --sf fuzz_nulls``
+builds a perturbed copy of sf0.001 (short/unicode/boilerplate docs,
+exact-boundary session gaps, duplicate timestamps, hour-edge events,
+NULL-punched nullable columns; ``tools/tiers.py``) and judges every key
+on it with ``compare.check_key``.
 
 Its first two sweeps found 7 latent divergences the per-SF gates could
 not see (byte-vs-char frame slicing on multibyte text, argmax ties on
@@ -15,9 +16,10 @@ fuzz sweep remains a tools/ job (it needs its own Spark session budget).
 
 from __future__ import annotations
 
-import glob
-
 import pytest
+
+from base_etl_spark import compare
+from tools.tiers import TIERS
 
 FOUND_BY_FUZZ = [
     "mm_frame_stats",
@@ -34,34 +36,13 @@ FOUND_BY_FUZZ = [
 
 @pytest.fixture(scope="module")
 def fuzz_sf():
-    from tools.fuzz_check import FUZZ_SF, build_fuzz_dir
-
-    build_fuzz_dir(with_nulls=True)
-    return FUZZ_SF
-
-
-@pytest.fixture(scope="module")
-def fuzz_duck(fuzz_sf):
-    import duckdb
-
-    con = duckdb.connect()
-    for p in glob.glob(f"{fuzz_sf}/*.parquet"):
-        name = p.split("/")[-1].removesuffix(".parquet")
-        con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{p}'")
-    return con
+    return TIERS["fuzz_nulls"]()
 
 
 @pytest.mark.parametrize("key", FOUND_BY_FUZZ)
-def test_fuzzed_key_matches_oracle(key, spark, fuzz_sf, fuzz_duck):
-    from base_etl_spark import oracle_sql, queries
-    from base_etl_spark.compare import compare_strict
-
-    sdf = queries()[key](spark, fuzz_sf)
-    srows = [tuple(r) for r in sdf.collect()]
-    problems = compare_strict(
-        sdf.columns, srows, fuzz_duck.sql(oracle_sql()[key]).df()
-    )
-    assert not problems, f"{key}: {problems}"
+def test_fuzzed_key_matches_oracle(key, spark, fuzz_sf):
+    v = compare.check_key(spark, compare.oracle_con(fuzz_sf), key, fuzz_sf)
+    assert v.status == compare.PASS, f"{key}: {v.problems}"
 
 
 def test_division_by_zero_is_null_not_ieee(spark):

@@ -638,6 +638,14 @@ def test_triangle_count_prunes_lineitem(spark):
     assert "ReadSchema: struct<l_orderkey:bigint,l_suppkey:bigint>" in plan
 
 
+@pytest.mark.parametrize("key", ["graph_degree_distribution", "graph_k_core"])
+def test_graph_keys_cache_nothing_across_calls(spark, key):
+    """Every call rebuilds its KNN edge frame: no cached relation from an
+    earlier call may appear in the plan."""
+    df = _QS[key](spark, SF_TEST)
+    assert "InMemoryRelation" not in df._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_image_dedup_reads_only_doc_id(spark):
     """The planted-asset kernel derives content from doc_id; scanning
     the text column would read ~95% more bytes for nothing."""

@@ -13,6 +13,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import subprocess
 import sys
 
 import pytest
@@ -20,9 +21,7 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TOOLS = [
     "check.py",
-    "empty_check.py",
     "exit_gate.py",
-    "fuzz_check.py",
     "invariance_check.py",
     "scale_stress.py",
 ]
@@ -64,3 +63,24 @@ def test_exit_gate_forced_fail_stage(tmp_path, monkeypatch) -> None:
     monkeypatch.setattr(exit_gate, "STAGES", fake[:1])
     rc = exit_gate.main()
     assert rc == 0 and json.load(open(out))["pass"] is True
+
+
+def _check(*args: str) -> subprocess.CompletedProcess:
+    return subprocess.run(
+        [sys.executable, "tools/check.py", *args],
+        cwd=REPO, capture_output=True, text=True, timeout=600,
+    )
+
+
+def test_check_sweeps_a_tier_by_name() -> None:
+    """``--sf <tier>`` builds the tier and judges declared and rows-only
+    keys alike."""
+    proc = _check("--sf", "empty", "agg_rollup", "graph_pagerank")
+    assert proc.returncode == 0, proc.stdout + proc.stderr
+    assert "1 pass, 1 rows-only, 0 fail / 2 keys" in proc.stdout
+
+
+def test_check_rejects_unknown_sf() -> None:
+    proc = _check("--sf", "no_such_tier_or_dir", "agg_rollup")
+    assert proc.returncode == 2
+    assert "neither a directory nor a tier" in proc.stderr

@@ -7,7 +7,13 @@ materialized the way the driver does it (Spark rows through pandas
 ns-datetimes, DuckDB through .df() so HUGEINT/DECIMAL->float64 coercions
 are visible). A green here means the driver's value-hash matches.
 
-Usage: python tools/check.py [key ...] [--sf /root/testdata/sf0.01]
+Each key is judged by ``base_etl_spark.compare.check_key``; rows-only
+keys run to check they do not crash. ``--sf`` takes a fixture directory
+or the name of a generated tier from ``tools/tiers.py`` (empty,
+empty_facts, one_row, fuzz, fuzz_nulls), which is built first. Exit code
+0 when no key fails, 1 when one does, 2 on a bad argument.
+
+Usage: python tools/check.py [key ...] [--sf DIR|TIER] [-v]
 """
 
 from __future__ import annotations
@@ -19,7 +25,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from base_etl_spark.compare import compare_strict  # noqa: E402
+from base_etl_spark import build_session, queries  # noqa: E402
+from base_etl_spark.compare import (  # noqa: E402
+    FAIL, PASS, ROWS_ONLY, check_key, oracle_con,
+)
+from tools.tiers import TIERS  # noqa: E402
 
 
 def main() -> int:
@@ -29,11 +39,15 @@ def main() -> int:
     ap.add_argument("--verbose", "-v", action="store_true")
     args = ap.parse_args()
 
-    import duckdb
-
-    from base_etl_spark import build_session, queries, oracle_sql
-
-    qs, osql = queries(), oracle_sql()
+    if args.sf in TIERS:
+        sf = TIERS[args.sf]()
+    elif os.path.isdir(args.sf):
+        sf = args.sf
+    else:
+        print(f"--sf {args.sf!r} is neither a directory nor a tier "
+              f"({', '.join(TIERS)})", file=sys.stderr)
+        return 2
+    qs = queries()
     keys = args.keys or list(qs)
     unknown = [k for k in keys if k not in qs]
     if unknown:
@@ -41,47 +55,28 @@ def main() -> int:
         return 2
 
     spark = build_session("check")
-    con = duckdb.connect()
-    for name in ["region", "nation", "customer", "supplier", "part", "orders",
-                 "lineitem", "events", "documents", "embeddings"]:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{args.sf}/{name}.parquet'"
-        )
+    spark.sparkContext.setLogLevel("ERROR")
+    con = oracle_con(sf)
 
-    n_pass = n_fail = n_rowsonly = 0
+    counts = dict.fromkeys((PASS, ROWS_ONLY, FAIL), 0)
     for k in keys:
         t0 = time.time()
-        try:
-            sdf = qs[k](spark, args.sf)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
-            print(f"FAIL  {k}: spark error: {e}")
-            n_fail += 1
-            continue
-        if k not in osql:
-            print(f"rows  {k}: {len(srows)} rows (rows-only, {time.time()-t0:.1f}s)")
-            n_rowsonly += 1
-            continue
-        try:
-            duck_df = con.sql(osql[k]).df()
-        except Exception as e:
-            print(f"FAIL  {k}: duckdb error: {e}")
-            n_fail += 1
-            continue
-        problems = compare_strict(scols, srows, duck_df)
-        if problems:
-            print(f"FAIL  {k}: " + " | ".join(problems))
-            if args.verbose:
-                print("  spark sample:", srows[:3])
-                print("  duck  sample:", duck_df.head(3).to_dict("records"))
-            n_fail += 1
+        v = check_key(spark, con, k, sf)
+        counts[v.status] += 1
+        if v.status == PASS:
+            print(f"PASS  {k}: {len(v.rows)} rows ({time.time()-t0:.1f}s)")
+        elif v.status == ROWS_ONLY:
+            print(f"rows  {k}: {len(v.rows)} rows (rows-only, {time.time()-t0:.1f}s)")
         else:
-            print(f"PASS  {k}: {len(srows)} rows ({time.time()-t0:.1f}s)")
-            n_pass += 1
+            print(f"FAIL  {k}: " + " | ".join(v.problems))
+            if args.verbose:
+                print("  spark sample:", v.rows[:3])
+                if v.oracle is not None:
+                    print("  duck  sample:", v.oracle.head(3).to_dict("records"))
 
-    print(f"\n{n_pass} pass, {n_rowsonly} rows-only, {n_fail} fail / {len(keys)} keys")
-    return 1 if n_fail else 0
+    print(f"\n{counts[PASS]} pass, {counts[ROWS_ONLY]} rows-only, "
+          f"{counts[FAIL]} fail / {len(keys)} keys")
+    return 1 if counts[FAIL] else 0
 
 
 if __name__ == "__main__":

@@ -10,13 +10,16 @@ machine-readable summary, EXITGATE.json, stamped with the git HEAD it
 ran at.
 
 Stages (each independently skippable):
-- pytest        full test suite at sf0.001
-- check_sf001   driver-strict oracle sweep, all keys, sf0.01
-- check_sf01    driver-strict oracle sweep, all keys, sf0.1
-- fuzz          perturbed-fixture sweep (all committed waves)
-- invariance    shuffle-partition flip 3 vs 32, sf0.001 and sf0.01
-- empty         degenerate tiers: all-empty, facts-only, one-row
-- scale         x10 amplified stress on headline + iterative keys
+- pytest             full test suite at sf0.001
+- check_sf001        tools/check.py, every key, sf0.01
+- check_sf01         tools/check.py, every key, sf0.1
+- fuzz               tools/check.py --sf fuzz (perturbed sf0.001)
+- invariance_sf0001  shuffle-partition flip 3 vs 32 at sf0.001
+- invariance_sf001   the same at sf0.01
+- empty              tools/check.py --sf empty (every table 0 rows)
+- empty_facts_only   tools/check.py --sf empty_facts (facts 0 rows)
+- empty_one_row      tools/check.py --sf one_row (every table 1 row)
+- scale_x10          x10 amplified stress on headline + iterative keys
 
 Usage: python tools/exit_gate.py [--skip STAGE ...] [--only STAGE ...]
 Exit code 0 iff every executed stage passed. Expect the full matrix to
@@ -38,13 +41,13 @@ STAGES: list[tuple[str, list[str]]] = [
     ("pytest", [sys.executable, "-m", "pytest", "tests/", "-q", "-p", "no:warnings"]),
     ("check_sf001", [sys.executable, "tools/check.py"]),
     ("check_sf01", [sys.executable, "tools/check.py", "--sf", "/root/testdata/sf0.1"]),
-    ("fuzz", [sys.executable, "tools/fuzz_check.py"]),
+    ("fuzz", [sys.executable, "tools/check.py", "--sf", "fuzz"]),
     ("invariance_sf0001", [sys.executable, "tools/invariance_check.py"]),
     ("invariance_sf001", [sys.executable, "tools/invariance_check.py",
                           "--sf", "/root/testdata/sf0.01"]),
-    ("empty", [sys.executable, "tools/empty_check.py"]),
-    ("empty_facts_only", [sys.executable, "tools/empty_check.py", "--facts-only"]),
-    ("empty_one_row", [sys.executable, "tools/empty_check.py", "--one-row"]),
+    ("empty", [sys.executable, "tools/check.py", "--sf", "empty"]),
+    ("empty_facts_only", [sys.executable, "tools/check.py", "--sf", "empty_facts"]),
+    ("empty_one_row", [sys.executable, "tools/check.py", "--sf", "one_row"]),
     ("scale_x10", [sys.executable, "tools/scale_stress.py", "--amp", "10"]),
 ]
 

@@ -20,7 +20,6 @@ BASELINE.md. Usage:
 from __future__ import annotations
 
 import argparse
-import glob
 import os
 import sys
 import time
@@ -39,14 +38,10 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    import duckdb
-
     from base_etl_spark import build_session, execute_fully, oracle_sql, queries
+    from base_etl_spark.compare import oracle_con
 
-    con = duckdb.connect()
-    for p in glob.glob(os.path.join(args.sf, "*.parquet")):
-        name = os.path.basename(p).removesuffix(".parquet")
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
+    con = oracle_con(args.sf)
 
     spark = build_session(
         "record_baselines",

@@ -1,16 +1,24 @@
-"""Advisor-style latent-divergence fuzzer.
+"""Generated fixture tiers for ``tools/check.py --sf <tier>``.
 
-The driver's fixtures are clean (no nulls, no short docs, no boundary
-timestamps), so a key can be green at every SF while still crashing or
-hash-diverging on realistic data — exactly the class of defect the r4
-ADVICE items were (short-doc sequence() crash, floor-second session
-gaps, empty pivot cells). This tool builds a PERTURBED copy of sf0.001
-with those realistic edges injected, then runs every declared key's
-Spark query AND DuckDB oracle on it and compares driver-strict. A
-mismatch here is a latent bug the per-SF gates cannot see; a crash is a
-latent outage.
+Each tier is a copy of sf0.001 in its own directory under ``.fuzz/``,
+with one table file per ``schemas.TABLE_NAMES`` in the sf0.001 footer's
+schema, built on demand by ``TIERS[name]()``, which returns the
+directory:
 
-Perturbations (seeded, deterministic):
+- ``empty``: every table truncated to 0 rows. Zero-row inputs are what a
+  filter-everything predicate, an empty ingest partition or a date with
+  no events produce; on them an operator must return exactly what its
+  oracle returns (usually 0 rows, or one all-NULL/zero row for global
+  aggregates), never raise.
+- ``empty_facts``: the fact tables empty, the dimensions populated — the
+  realistic mixed shape of an empty fact partition.
+- ``one_row``: every table truncated to its first row (degenerate
+  statistics: variance of one point, 0/0 ratios, windows of width one).
+- ``fuzz``: sf0.001 with realistic edges appended (see below); a key can
+  be green at every SF and still crash or diverge on them.
+- ``fuzz_nulls``: ``fuzz`` plus NULLs in nullable non-key columns.
+
+Fuzz perturbations (deterministic):
 - documents: empty/1-char/29/30/31-char texts, shared verbatim
   boilerplate across 3 docs, unicode text, single-token text, runs of
   spaces, a 10k-char doc; (wave 3) beyond-BMP 4-byte UTF-8 with
@@ -39,32 +47,94 @@ Perturbations (seeded, deterministic):
   classes with interleaved ids (the collapsed dedup_embedding regime),
   one of them byte-distinct but PARALLEL to the tiny-norm vector —
   normalization-identical without being collapse-mergeable.
-- optional --nulls: NULLs punched into nullable non-key columns
+- fuzz_nulls only: NULLs punched into nullable non-key columns
   (events.value, documents.lang/source, embeddings.label).
-
-Usage: python tools/fuzz_check.py [--nulls] [key ...]
 """
 
 from __future__ import annotations
 
-import argparse
 import datetime as dt
-import glob
+import functools
 import os
 import shutil
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from base_etl_spark.schemas import TABLE_NAMES
 
 SRC_SF = "/root/testdata/sf0.001"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+EMPTY_SF = os.path.join(REPO, ".fuzz", "sfempty")
+EMPTY_FACTS_SF = os.path.join(REPO, ".fuzz", "sfempty_facts")
+ONE_ROW_SF = os.path.join(REPO, ".fuzz", "sfonerow")
 FUZZ_SF = os.path.join(REPO, ".fuzz", "sffuzz")
+FUZZ_NULLS_SF = os.path.join(REPO, ".fuzz", "sffuzz_nulls")
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+# The mixed tier's fact/dim split: dimensions exist from day one of any
+# deployment; what production actually produces is an EMPTY FACT
+# PARTITION against populated dims (a holiday with no orders, an ingest
+# gap, a filter that eliminated the day).
+FACTS = ["orders", "lineitem", "events", "documents", "embeddings"]
+
+
+def _build_dir(dst_dir: str, empty: set[str]) -> str:
+    """Copy of the sf0.001 tier with the named tables truncated to 0
+    rows, schema preserved bit-for-bit (taken from the parquet footers,
+    so nanos-timestamp layouts and nullability flags survive)."""
+    os.makedirs(dst_dir, exist_ok=True)
+    for name in TABLE_NAMES:
+        dst = os.path.join(dst_dir, f"{name}.parquet")
+        src = os.path.join(SRC_SF, f"{name}.parquet")
+        if name in empty:
+            tbl = pq.read_table(src)
+            if (
+                os.path.exists(dst)
+                and pq.read_table(dst).schema.equals(tbl.schema)
+                and pq.read_metadata(dst).num_rows == 0
+            ):
+                continue
+            pq.write_table(tbl.slice(0, 0), dst)
+        else:
+            if (
+                os.path.exists(dst)
+                and os.path.getsize(dst) == os.path.getsize(src)
+            ):
+                continue
+            shutil.copyfile(src, dst)
+    return dst_dir
+
+
+def build_empty_dir() -> str:
+    """All-tables-empty tier."""
+    return _build_dir(EMPTY_SF, set(TABLE_NAMES))
+
+
+def build_empty_facts_dir() -> str:
+    """Facts-empty / dims-populated tier (the realistic mixed shape)."""
+    return _build_dir(EMPTY_FACTS_SF, set(FACTS))
+
+
+def build_one_row_dir() -> str:
+    """Every table truncated to its FIRST row — the degenerate-statistics
+    tier: sample variance of one point, regression over one x, 0/0
+    ratios, windows of width one. NaN-vs-NULL and 0-vs-NULL divergences
+    between engines live exactly here. (Cross-table keys generally won't
+    match, so joins mostly go empty — that shape is covered by the empty
+    tiers; this one targets single-group aggregates.)"""
+    os.makedirs(ONE_ROW_SF, exist_ok=True)
+    for name in TABLE_NAMES:
+        dst = os.path.join(ONE_ROW_SF, f"{name}.parquet")
+        src = os.path.join(SRC_SF, f"{name}.parquet")
+        tbl = pq.read_table(src)
+        if (
+            os.path.exists(dst)
+            and pq.read_table(dst).schema.equals(tbl.schema)
+            and pq.read_metadata(dst).num_rows == 1
+        ):
+            continue
+        pq.write_table(tbl.slice(0, 1), dst)
+    return ONE_ROW_SF
 
 
 def _tpch_rows(name: str, with_nulls: bool) -> dict[str, list]:
@@ -148,24 +218,21 @@ def _tpch_rows(name: str, with_nulls: bool) -> dict[str, list]:
     raise ValueError(name)
 
 
-def build_fuzz_dir(with_nulls: bool) -> None:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    # Scope the wipe to OUR tier only: .fuzz/ is shared with
-    # empty_check's sfempty/sfempty_facts/sfonerow dirs, and nuking the
-    # parent mid-run destroyed a concurrent empty sweep's tables out
-    # from under it (exit-gate empty stages failed PATH_NOT_FOUND,
-    # round 6).
-    shutil.rmtree(FUZZ_SF, ignore_errors=True)
-    os.makedirs(FUZZ_SF)
+def build_fuzz_dir(with_nulls: bool) -> str:
+    """The ``fuzz`` tier, or ``fuzz_nulls`` when ``with_nulls``; each is
+    rebuilt from scratch in its own directory."""
+    dst_dir = FUZZ_NULLS_SF if with_nulls else FUZZ_SF
+    # Wipe this tier's directory only: .fuzz/ holds every tier, and a
+    # sweep may be reading another one.
+    shutil.rmtree(dst_dir, ignore_errors=True)
+    os.makedirs(dst_dir)
 
     perturbed = ("documents", "events", "orders", "lineitem", "customer",
                  "part", "embeddings")
-    for name in TABLES:
+    for name in TABLE_NAMES:
         src = os.path.join(SRC_SF, f"{name}.parquet")
         if name not in perturbed:
-            shutil.copy(src, os.path.join(FUZZ_SF, f"{name}.parquet"))
+            shutil.copy(src, os.path.join(dst_dir, f"{name}.parquet"))
             continue
 
         tbl = pq.read_table(src)
@@ -176,7 +243,7 @@ def build_fuzz_dir(with_nulls: bool) -> None:
                 {k: pa.array(v).cast(fields[k]) for k, v in rows.items()}
             )
             out = pa.concat_tables([tbl, extra.select(tbl.column_names)])
-            pq.write_table(out, os.path.join(FUZZ_SF, f"{name}.parquet"))
+            pq.write_table(out, os.path.join(dst_dir, f"{name}.parquet"))
             continue
         if name == "documents":
             base_id = 1_000_000
@@ -294,81 +361,23 @@ def build_fuzz_dir(with_nulls: bool) -> None:
                 rows["value"] += [None]
                 rows["props"] += ["{}"]
             fields = {f.name: f.type for f in tbl.schema}
-            import pyarrow as _pa
-
             ts_type = fields["ts"]
             arrays = {}
             for k, v in rows.items():
                 if k == "ts":
-                    arrays[k] = _pa.array(v).cast(ts_type)
+                    arrays[k] = pa.array(v).cast(ts_type)
                 else:
-                    arrays[k] = _pa.array(v, type=fields[k])
+                    arrays[k] = pa.array(v, type=fields[k])
             extra = pa.table(arrays)
             out = pa.concat_tables([tbl, extra.select(tbl.column_names)])
-        pq.write_table(out, os.path.join(FUZZ_SF, f"{name}.parquet"))
+        pq.write_table(out, os.path.join(dst_dir, f"{name}.parquet"))
+    return dst_dir
 
 
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("keys", nargs="*")
-    ap.add_argument("--nulls", action="store_true")
-    args = ap.parse_args()
-
-    build_fuzz_dir(args.nulls)
-
-    import duckdb
-
-    from base_etl_spark import build_session, oracle_sql, queries
-    from base_etl_spark.compare import compare_strict
-
-    qs, osql = queries(), oracle_sql()
-    keys = args.keys or [k for k in qs if k in osql]
-    spark = build_session("fuzz")
-    spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {name} AS "
-            f"SELECT * FROM '{FUZZ_SF}/{name}.parquet'"
-        )
-
-    n_pass = n_fail = 0
-    for k in keys:
-        t0 = time.time()
-        try:
-            sdf = qs[k](spark, FUZZ_SF)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
-            print(f"CRASH {k}: spark error: {type(e).__name__}: "
-                  f"{str(e).splitlines()[0][:200]}")
-            n_fail += 1
-            continue
-        if k not in osql:
-            # rows-only key named explicitly: the checkable contract on
-            # perturbed fixtures is "runs and returns a frame" (the
-            # default sweep skips R keys; their invariants live in
-            # tests/test_selfchecks.py).
-            print(f"rows  {k}: {len(srows)} rows (rows-only, {time.time() - t0:.1f}s)")
-            n_pass += 1
-            continue
-        try:
-            odf = con.sql(osql[k]).df()
-        except Exception as e:
-            print(f"CRASH {k}: oracle error: {type(e).__name__}: "
-                  f"{str(e).splitlines()[0][:200]}")
-            n_fail += 1
-            continue
-        problems = compare_strict(scols, srows, odf)
-        if problems:
-            print(f"DIVERGE {k}: {str(problems)[:300]}")
-            n_fail += 1
-        else:
-            n_pass += 1
-            print(f"PASS  {k} ({time.time() - t0:.1f}s)")
-    print(f"\n{n_pass} pass, {n_fail} crash/diverge / {len(keys)} keys")
-    return 1 if n_fail else 0
-
-
-if __name__ == "__main__":
-    sys.exit(main())
+TIERS = {
+    "empty": build_empty_dir,
+    "empty_facts": build_empty_facts_dir,
+    "one_row": build_one_row_dir,
+    "fuzz": functools.partial(build_fuzz_dir, with_nulls=False),
+    "fuzz_nulls": functools.partial(build_fuzz_dir, with_nulls=True),
+}
