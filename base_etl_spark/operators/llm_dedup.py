@@ -285,7 +285,8 @@ def bucket_pairs(
     cap would read as full recall when it wasn't. ``bucket_overflow``
     returns the same buckets as a queryable frame. MinHash bucket keys
     collide for non-similar docs with P ~ 2^-64, so an overflowing
-    bucket means >cap genuinely near-identical docs: exact-dup
+    bucket almost always means >cap genuinely near-identical docs (the
+    exception, a fused-key collision, is described below): exact-dup
     pre-collapse (dedup_near_minhash) removes the identical-text cause;
     what remains above the cap is reported, not exploded. cap=None
     disables the guard (property tests compare against naive all-pairs)."""
@@ -293,10 +294,11 @@ def bucket_pairs(
     # of the (int, long) pair — 20 % fewer key bytes per row and
     # single-column hashing. Bucket identity changes only on a
     # cross-band xxhash64 collision (P ~ 2^-64 per bucket pair), which
-    # MERGES two buckets. Under the cap that only adds candidates, and
-    # every candidate is exact-verified downstream. But two buckets that
-    # are each under the cap can merge into one over it, which the cap
-    # filter below then skips, dropping their pairs. That case is
+    # MERGES two buckets. A merged bucket that stays under the cap only
+    # adds candidates, and every candidate is exact-verified downstream.
+    # But a collision can also remove candidates: two buckets that are
+    # each under the cap can merge into one over it, which the cap
+    # filter below then drops, losing the pairs of both. That case is
     # counted by this fused-grain ``lsh_bucket_overflow``
     # ``overflow_buckets`` observe, NOT by the (band, bh)-grain
     # ``bucket_overflow`` frame (nor dedup_bucket_stats), which see two

@@ -10,7 +10,8 @@ sums in the oracles are CAST to BIGINT (DuckDB HUGEINT → float64 under
 
 Scale posture: every query here is dimension-broadcast + single fact
 shuffle, or a two-level hash aggregate; EXISTS/NOT EXISTS compile to
-left-semi/left-anti shuffle joins on the fact key; the correlated
+left-semi/left-anti shuffle joins on the fact key, except Q21's pair on
+the same fact, which folds into one per-order aggregate; the correlated
 aggregates are decorrelated into explicit partial aggregates joined back
 (what Catalyst's RewriteCorrelatedScalarSubquery emits for the SQL form).
 """
@@ -543,88 +544,50 @@ def join_q20_excess_share(t: Tables) -> DataFrame:
 )
 def join_q21_waiting(t: Tables) -> DataFrame:
     """TPC-H Q21 shape (suppliers who kept orders waiting): the classic
-    EXISTS + NOT EXISTS double correlation on the same fact — semi join
-    on (same order, other supplier), anti join on (same order, other
-    supplier, also late).
+    EXISTS + NOT EXISTS double correlation on the same fact. Adaptation:
+    'late' is l_returnflag='R' (no receipt/commit dates).
 
-    Adaptation: 'late' is l_returnflag='R' (no receipt/commit dates).
-
-    r11 restructure (guide §2.3/§2.4 — aggregate before you shuffle,
-    remove shuffles outright): the EXISTS/NOT-EXISTS pair is replaced
-    by ONE per-orderkey aggregate over the fact. For an l1 row with
-    supplier s (late by the l1 filter):
-      EXISTS l2 (other supplier in the order)       ⟺ n_supp >= 2
-      NOT EXISTS l3 (other LATE supplier)           ⟺ n_late_supp == 1
-    (s itself is late, so the late-supplier set is exactly {s} iff its
-    cardinality is 1 — both directions are immediate). The old shape
-    shuffled the raw l2 (full fact, 2 cols) and l3 (late rows) legs and
-    sort-merge-joined them against l1 with a <> residual; the new shape
-    shuffles once per grain through map-side-combined aggregates — a
-    (orderkey, suppkey, late) distinct pass, then a per-orderkey
-    census — and joins l1 against the filtered orderkey list. Plan:
-    3 fact scans + 2 SMJs with raw legs → 2 fact scans + 1 SMJ on
-    aggregated rows. Oracle unchanged; equivalence hash-proven at
-    sf0.001/0.01/0.1 (tools/check.py, this round).
-
-    At 100 TB: both fact legs hash-shuffle on l_orderkey; the per-order
-    census is two-level (partial agg per (orderkey, suppkey) first), so
-    shuffle bytes scale with distinct (order, supplier) pairs, not
-    lines. The fact-derived sides keep the explicit merge hint: the
-    session's 64 MB broadcast threshold (tuned so dims always
-    broadcast) otherwise catches the column-pruned projections at mid
-    scale and builds a fact-sized broadcast hash table — measured 5.8x
-    slower than the shuffle plan at 30x sf0.1 (tools/scale_stress.py
-    A/B), and strictly worse on a real cluster where the build ships to
-    every executor.
+    Both correlations reduce to one per-order aggregate over a single
+    lineitem scan, combined map-side before its one shuffle. For a late
+    line with supplier s, EXISTS (same order, other supplier) holds iff
+    the order's suppliers are not all s: min(l_suppkey) < max(l_suppkey).
+    NOT EXISTS (same order, other supplier, late) holds iff the order's
+    late suppliers are exactly {s}: their min equals their max. A
+    qualifying order therefore has one late supplier, late_lo, and
+    contributes its n_late late lines. NULLs drop out as they do under
+    the oracle's <> predicates: min, max and count skip a NULL
+    l_suppkey, a NULL l_returnflag is not late, and a NULL l_orderkey
+    matches no order. The orders side stays merge-pinned: the 64 MB
+    dimension broadcast threshold would otherwise build a fact-sized
+    broadcast hash table at mid scale (measured 5.8x slower than the
+    shuffle plan at 30x sf0.1). Supplier broadcasts.
     """
-    # ONE fact exchange serves BOTH census grains below (guide §2.4 —
-    # two operations keyed the same way share one exchange):
-    # HashPartitioning(l_orderkey) satisfies the clustering requirement
-    # of the (l_orderkey, l_suppkey) aggregate AND the per-orderkey
-    # census, so the two aggregates run back-to-back on a single
-    # shuffle (plan: 4 stacked HashAggregates over one Exchange). The
-    # l1 leg does NOT share it: Catalyst pushes the late==1 filter
-    # below the repartition into its own pruned scan, so l1 keeps a
-    # separate scan+exchange carrying only the R rows — 2 fact scans
-    # and 2 fact exchanges total, down from 4 scans / 3 exchanges
-    # pre-r11 (see plans/r11/q21_waiting_after.txt; an earlier comment
-    # here overclaimed ReuseExchange across the l1 fork — r11 ADVICE).
-    # The census exchange carries raw (orderkey, suppkey, late) triples
-    # instead of map-side-combined pairs, but (orderkey, suppkey) is
-    # near-unique per line so the lost partial-agg dedup is ~nothing at
-    # any scale.
-    base = t.lineitem.select(
-        "l_orderkey",
-        "l_suppkey",
-        (F.col("l_returnflag") == "R").cast("int").alias("late"),
-    ).repartition("l_orderkey")
-    l1 = base.filter(F.col("late") == 1).select("l_orderkey", "l_suppkey").alias("l1")
-    per_supp = base.groupBy("l_orderkey", "l_suppkey").agg(F.max("late").alias("late"))
-    qualifying = (
-        per_supp.groupBy("l_orderkey")
+    supp = F.col("l_suppkey")
+    late_supp = F.when(F.col("l_returnflag") == "R", supp)
+    census = (
+        t.lineitem.groupBy("l_orderkey")
         .agg(
-            F.count(F.lit(1)).alias("n_supp"),
-            F.sum("late").alias("n_late_supp"),
+            F.min(supp).alias("s_lo"),
+            F.max(supp).alias("s_hi"),
+            F.min(late_supp).alias("late_lo"),
+            F.max(late_supp).alias("late_hi"),
+            F.count(late_supp).alias("n_late"),
         )
-        .filter((F.col("n_supp") >= 2) & (F.col("n_late_supp") == 1))
-        .select("l_orderkey")
-        .hint("merge")
+        .filter((F.col("s_lo") < F.col("s_hi")) & (F.col("late_lo") == F.col("late_hi")))
     )
     f_orders = (
         t.orders.filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey")
         .hint("merge")
     )
-    waiting = l1.join(f_orders, F.col("l1.l_orderkey") == F.col("o_orderkey"), "left_semi").join(
-        qualifying, "l_orderkey", "left_semi"
-    )
     return (
-        waiting.join(
+        census.join(f_orders, F.col("l_orderkey") == F.col("o_orderkey"), "left_semi")
+        .join(
             F.broadcast(t.supplier.select("s_suppkey", "s_name")),
-            F.col("l1.l_suppkey") == F.col("s_suppkey"),
+            F.col("late_lo") == F.col("s_suppkey"),
         )
         .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
+        .agg(F.sum("n_late").alias("numwait"))
     )
 
 

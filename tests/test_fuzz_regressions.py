@@ -12,14 +12,21 @@ NULL-labeled docs training a langid profile, DuckDB raising on ln(0) where
 Spark yields NULL). This test re-runs exactly
 those keys on the fuzzed data so the fixes stay pinned; the full-surface
 fuzz sweep remains a tools/ job (it needs its own Spark session budget).
+``test_q21_null_supplier_lines`` plants NULL-supplier lines, which no
+tier has, on its own copy of sf0.001.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from base_etl_spark import compare
-from tools.tiers import TIERS
+from tools.tiers import TIERS, _build_dir
 
 FOUND_BY_FUZZ = [
     "mm_frame_stats",
@@ -66,3 +73,64 @@ def test_division_by_zero_is_null_not_ieee(spark):
         .collect()
     )
     assert ordered[0].x is None  # NULLS FIRST ascending
+
+
+def _append_rows(sf_dir: str, name: str, rows: dict[str, list]) -> None:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    tbl = pq.read_table(path)
+    extra = pa.table({k: pa.array(v).cast(tbl.schema.field(k).type) for k, v in rows.items()})
+    pq.write_table(pa.concat_tables([tbl, extra.select(tbl.column_names)]), path)
+
+
+def test_q21_null_supplier_lines(spark, tmp_path):
+    """join_q21_waiting treats NULLs as the oracle's <> predicates do: a
+    NULL l_suppkey is neither 'another supplier' (EXISTS) nor 'another
+    late supplier' (NOT EXISTS), a NULL l_returnflag is not late, and a
+    NULL l_orderkey matches no order. The orders below are planted on a
+    copy of sf0.001 (suppliers 0-9 exist; 'R' is a late line)."""
+    B = 3_000_000
+    lines = [  # (l_orderkey, l_suppkey, l_returnflag)
+        # one late supplier with two late lines, plus a punctual one
+        (B, 1, "R"), (B, 1, "R"), (B, 2, "N"),
+        # two late suppliers
+        (B + 1, 3, "R"), (B + 1, 4, "R"),
+        # a single supplier
+        (B + 2, 5, "R"), (B + 2, 5, "N"),
+        # the only other line has no supplier
+        (B + 3, 6, "R"), (B + 3, None, "N"),
+        # a late line without a supplier is no other late supplier
+        (B + 4, 7, "R"), (B + 4, None, "R"), (B + 4, 8, "N"),
+        # the other line's flag is NULL, so it is not late
+        (B + 5, 9, "R"), (B + 5, 0, None),
+        # status-O order
+        (B + 6, 1, "R"), (B + 6, 2, "N"),
+        # lines of no order
+        (None, 1, "R"), (None, 2, "N"),
+    ]
+    sf_dir = _build_dir(str(tmp_path), set())
+    statuses = ["F"] * 6 + ["O"]
+    _append_rows(sf_dir, "orders", {
+        "o_orderkey": [B + i for i in range(len(statuses))],
+        "o_custkey": [7] * len(statuses),
+        "o_orderstatus": statuses,
+        "o_totalprice": [100.0] * len(statuses),
+        "o_orderdate": [dt.datetime(1996, 3, 1)] * len(statuses),
+        "o_orderpriority": ["3-MEDIUM"] * len(statuses),
+    })
+    okey, skey, flag = (list(c) for c in zip(*lines))
+    n = len(lines)
+    _append_rows(sf_dir, "lineitem", {
+        "l_orderkey": okey,
+        "l_partkey": [1] * n,
+        "l_suppkey": skey,
+        "l_linenumber": list(range(1, n + 1)),
+        "l_quantity": [1.0] * n,
+        "l_extendedprice": [10.0] * n,
+        "l_discount": [0.0] * n,
+        "l_tax": [0.0] * n,
+        "l_returnflag": flag,
+        "l_linestatus": ["F"] * n,
+        "l_shipdate": [dt.datetime(1996, 3, 2)] * n,
+    })
+    v = compare.check_key(spark, compare.oracle_con(sf_dir), "join_q21_waiting", sf_dir)
+    assert v.status == compare.PASS, v.problems

@@ -3,6 +3,8 @@ defeat Catalyst. These read explain() output, not results."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -367,18 +369,25 @@ def test_q7_broadcast_both_nation_legs(spark):
 
 
 def test_q21_semi_anti_no_nested_loop(spark):
-    """Q21 (r11 restructure): the EXISTS/NOT-EXISTS pair is replaced by
-    one per-orderkey census aggregate (n_supp >= 2 AND n_late_supp == 1),
-    so the plan must carry semi joins on the l_orderkey equi key, the
-    two-level HashAggregate census (partial per (orderkey, suppkey)
-    first — map-side combine), and NO anti join or nested loop: a
-    nested loop here would be quadratic in order size at scale."""
+    """Q21: the EXISTS/NOT-EXISTS pair is one per-orderkey census over a
+    single lineitem scan, combined map-side (partial HashAggregate)
+    before its one shuffle. No raw-fact repartition, no second lineitem
+    leg, no anti join or nested loop (quadratic in order size at scale);
+    the census semi-joins the F orders, and supplier is the only
+    broadcast build."""
     plan = _plan(_QS["join_q21_waiting"](spark, SF_TEST))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "LeftSemi" in plan
-    assert "LeftAnti" not in plan  # the NOT-EXISTS leg is now an aggregate
-    assert "HashAggregate" in plan
+    assert "LeftAnti" not in plan
+    assert "partial_min(l_suppkey" in plan
+    assert "REPARTITION_BY_COL" not in plan
+    # the node details follow the tree, one "(n) Name" block per node
+    blocks = re.split(r"\n(?=\(\d+\) )", plan.split("\n\n", 1)[1])
+    scans = [b for b in blocks if b.split("\n", 1)[0].endswith("Scan parquet ")]
+    assert sum("/lineitem.parquet]" in b for b in scans) == 1
+    builds = [b for b in blocks if re.match(r"\(\d+\) BroadcastExchange", b)]
+    assert len(builds) == 1 and "s_suppkey" in builds[0]
 
 
 def test_q19_pushes_common_quantity_range(spark):
@@ -408,17 +417,16 @@ def test_fact_joins_pinned_to_merge(spark):
     The twelfth key (dedup_near_minhash) is pinned for a harder reason:
     its candidate side has no static bound and OOM'd as a broadcast.
 
-    Counts, not presence: multi-join keys (q21 pins several sides) would
-    still 'contain SortMergeJoin' after ONE pinned side silently
+    Counts, not presence: a multi-join key would still 'contain
+    SortMergeJoin' after ONE pinned side silently
     regressed to a broadcast build — exactly the regression this test
     exists to catch. Expected counts were read off the committed plans
     (formatted explain lists each SMJ node twice: tree + detail, so one
     pinned join contributes 2 occurrences)."""
     for key, min_smj_nodes in (
-        # r11: q21's l2/l3 raw legs folded into one per-orderkey census
-        # aggregate, so the pinned sides are the census + f_orders (2
-        # SMJs), down from 3 raw-leg joins — see tpch_extra.py docstring
-        ("join_q21_waiting", 2),
+        # q21: the per-orderkey census drives one merge-pinned semi join
+        # against the F orders
+        ("join_q21_waiting", 1),
         ("join_q4_priority_exists", 1),
         ("join_q7_volume", 1),
         ("join_q9_profit", 1),
