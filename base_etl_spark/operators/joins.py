@@ -1133,12 +1133,15 @@ def join_bloom_prefilter(t: Tables) -> DataFrame:
     provably identical to the plain join, which is exactly what the
     oracle runs.
 
-    Why manual when Spark can inject this: measured in tools/bloom_ab.py
-    — the built-in rule only fires on shuffle joins AND gates the
-    creation side on the PLAN SIZE ESTIMATE, which without CBO column
-    stats is the unfiltered scan size, so a selective-but-big creation
-    side (the 100 TB fact-fact case this key models) silently loses the
-    filter. The composition pins the semantics in the plan itself:
+    Why manual when Spark can inject this: the built-in rule only fires
+    on shuffle joins AND gates the creation side on the PLAN SIZE
+    ESTIMATE, which without CBO column stats is the unfiltered scan
+    size, so a selective-but-big creation side (the 100 TB fact-fact
+    case this key models) silently loses the filter. Measured on this
+    shape at x30 with broadcast disabled and the gates forced open
+    (SURVEY.md, "Runtime bloom filter, measured"): plain shuffle join
+    1.386 s, bloom-injected 1.104 s, broadcast reference 0.800 s. The
+    composition pins the semantics in the plan itself:
     one bounded broadcast (bucket table), one fact scan pruned at
     ~selectivity + FP rate, one merge join (fact-derived sides pinned
     per the mid-scale broadcast trap, SURVEY §2.16). Plan-asserted:

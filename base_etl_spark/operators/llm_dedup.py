@@ -56,7 +56,7 @@ def _spread(docs: DataFrame) -> DataFrame:
     n = docs.sparkSession.sparkContext.defaultParallelism
     return docs.repartition(n, F.col("doc_id"))
 _N_HASHES = 32  # MinHash signature length
-_N_BANDS = 8  # 8 bands x 4 rows; P(candidate) = 1-(1-j^4)^8 ~ .97 at j=.6
+_N_BANDS = 8  # 8 bands x 4 rows; P(candidate) = 1-(1-j^4)^8: 0.67 at j=.6, 0.97 at j~.77
 _SHINGLE = 3  # words per shingle
 
 
@@ -181,10 +181,11 @@ def _shingles(col: str = "text", k: int = _SHINGLE) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = _N_HASHES) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, sig: array<long>) — sig[i] = min over shingles of a seeded
     64-bit hash (multi-arg xxhash64(seed, shingle_hash): one string hash
-    per shingle, then n cheap 64-bit mixes — the two-level hash family).
+    per shingle, then _N_HASHES cheap 64-bit mixes — the two-level hash
+    family).
 
     Shape: explode distinct shingles -> one flat 32-aggregate min per
     doc_id. The explode LOOKS like it should shuffle every (doc, shingle)
@@ -202,16 +203,16 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = _N_HASHES) -> DataFrame:
         "doc_id", F.explode(F.array_distinct(_shingles())).alias("s")
     ).select("doc_id", F.xxhash64("s").alias("h"))
     return sh.groupBy("doc_id").agg(
-        F.array(*[F.min(F.xxhash64(F.lit(i), "h")) for i in range(n_hashes)]).alias("sig")
+        F.array(*[F.min(F.xxhash64(F.lit(i), "h")) for i in range(_N_HASHES)]).alias("sig")
     )
 
 
-def banded_signatures(sigs: DataFrame, n_bands: int = _N_BANDS) -> DataFrame:
-    """(doc_id, band, bh): each signature exploded into its n_bands
+def banded_signatures(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band, bh): each signature exploded into its _N_BANDS
     64-bit band hashes — the shared banding projection behind
     lsh_candidate_pairs and dedup_bucket_stats (in-row explode, no
     shuffle; the bucket shuffle happens in the consumer)."""
-    rows_per_band = _N_HASHES // n_bands
+    rows_per_band = _N_HASHES // _N_BANDS
     return sigs.select(
         "doc_id",
         F.explode(
@@ -223,14 +224,14 @@ def banded_signatures(sigs: DataFrame, n_bands: int = _N_BANDS) -> DataFrame:
                             *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
                         ).alias("bh"),
                     )
-                    for b in range(n_bands)
+                    for b in range(_N_BANDS)
                 ]
             )
         ).alias("bb"),
     ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
 
 
-def lsh_candidate_pairs(sigs: DataFrame, n_bands: int = _N_BANDS) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Docs agreeing on any full band become candidates.
 
     Implemented as groupBy (band, band_hash) + collect the bucket's
@@ -247,7 +248,7 @@ def lsh_candidate_pairs(sigs: DataFrame, n_bands: int = _N_BANDS) -> DataFrame:
     pre-collapses exact-dup classes so identical text can never build a
     giant bucket in the first place; dedup_bucket_stats reports the
     observed bucket-size distribution."""
-    return bucket_pairs(banded_signatures(sigs, n_bands), "doc_id", "doc_a", "doc_b")
+    return bucket_pairs(banded_signatures(sigs), "doc_id", "doc_a", "doc_b")
 
 
 BUCKET_CAP = 1024  # max ids per LSH bucket before the skew guard fires
@@ -598,50 +599,19 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     return agg.select("doc_id", simhash.alias("simhash"))
 
 
-def _propagate_min_labels(
-    pairs: DataFrame, max_rounds: int | None = None, what: str = "min-label propagation"
-) -> DataFrame:
+def _propagate_min_labels(pairs: DataFrame, what: str = "min-label propagation") -> DataFrame:
     """(node, lab) min-label propagation over an undirected pair graph:
-    each round every node adopts the minimum label among itself and its
-    neighbors; converges in O(component diameter) rounds. ONE join +
-    one groupBy + one action per round: the moved flag rides inside the
-    checkpointed frame, so convergence is a cheap sum over the already-
-    materialized blocks instead of a second label-vs-label join per
-    round (r10 quality_survivor shave — the old shape paid two jobs a
-    round). localCheckpoint per round keeps lineage flat; the round cap
-    is a runaway guard that RAISES instead of returning non-converged
-    labels — and it is sized from the DATA (r9 ADVICE, same fix as
-    graph_k_core): component diameter is at most node_count - 1, so
-    max(100, node_count) can never spuriously raise on a chain-shaped
-    graph the way a fixed constant would.
-
-    r11 (guide §1.2 — fewer driver round-trips): the per-round
-    checkpoint is LAZY (eager=False), so the convergence read is the
-    job that materializes the round — ONE Spark job per round instead
-    of the eager checkpoint job + the convergence job. (The seed label
-    frame stays eager: round 1's plan references it twice — via neigh
-    and directly — and an unmaterialized lazy-checkpoint RDD scanned
-    by two concurrent stages would be computed twice.) The data-sized
-    cap's node count is likewise deferred: labels carries every node
-    in every round, so the count is only read — from the cached frame —
-    if round 100 is ever reached, and graphs that converge earlier
-    (all fixtures) never pay that job.
-
-    r12 (guide §1.2 again — the r11 quality_survivor wobble triage):
-    each round now applies TWO hops before the convergence read. The
-    frames are tiny at every scale that matters here (rep-graph nodes,
-    not corpus rows), so a round's cost is driver-latency-bound, and
-    two joins in one job cost barely more than one — measured rounds
-    at sf0.1: graph_components 6 → 3, collapsed labels 2 → 1 (wall
-    time a wash locally; the job halving is the scale win). Results
-    are IDENTICAL: min-label propagation is monotone with a unique
-    fixpoint (the component minimum), so extra hops can only reach it
-    sooner, and a second hop that moves nothing proves the first hop's
-    output was already the fixpoint. The intermediate hop is NOT
-    checkpointed — both of hop 2's references to it shuffle on the
-    same key, so ReuseExchange evaluates it once. The round cap
-    counts DOUBLE rounds against the node-count bound, which stays a
-    valid diameter bound (two hops cover at least one)."""
+    each round applies two hops (every node adopts the minimum label
+    among itself and its neighbours) and then one Spark job that
+    materializes the lazily checkpointed round and sums its moved flags;
+    the labels converge to each component's minimum node in
+    O(component diameter) rounds. The intermediate hop is not
+    checkpointed: both of the second hop's references to it shuffle on
+    the same key, so ReuseExchange evaluates it once. The round count
+    is recorded in ``iterstats`` under ``what``. Runaway guard: a graph
+    still moving after max(100, node count) rounds raises instead of
+    returning non-converged labels; the node count bounds the diameter
+    and is read only if round 100 is reached."""
     edges = (
         pairs.unionByName(
             pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
@@ -649,52 +619,46 @@ def _propagate_min_labels(
         .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .persist()
     )
+
+    def _hop(lbl: DataFrame) -> DataFrame:
+        neigh = (
+            edges.join(lbl, edges.src == lbl.node)
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("lab").alias("nlab"))
+        )
+        return lbl.join(neigh, "node", "left").select(
+            "node",
+            F.least("lab", F.coalesce("nlab", "lab")).alias("lab"),
+            (F.coalesce("nlab", "lab") < F.col("lab")).alias("moved"),
+        )
+
+    # the seed frame is checkpointed eagerly: round 1's plan reads it twice
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("lab"))
         .localCheckpoint()
     )
-    cap = max_rounds if max_rounds is not None else 100
-    cap_is_final = max_rounds is not None
+    cap = 100
     changed = -1
     rnd = 0
-    while True:
-        if rnd >= cap:
-            if cap_is_final:
-                break
-            # diameter <= node_count - 1 bounds the rounds; labels holds
-            # every node each round, so read the count off the cached frame
+    while changed != 0:
+        if rnd == 100:
+            # labels holds every node each round: count the cached frame
             cap = max(100, labels.count())
-            cap_is_final = True
-            if rnd >= cap:
-                break
-        def _hop(lbl: DataFrame) -> DataFrame:
-            neigh = (
-                edges.join(lbl, edges.src == lbl.node)
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min("lab").alias("nlab"))
-            )
-            return lbl.join(neigh, "node", "left").select(
-                "node",
-                F.least("lab", F.coalesce("nlab", "lab")).alias("lab"),
-                (F.coalesce("nlab", "lab") < F.col("lab")).alias("moved"),
-            )
-
-        hop1 = _hop(labels).select("node", "lab")
-        new_labels = _hop(hop1).localCheckpoint(eager=False)
+        if rnd >= cap:
+            break
+        new_labels = _hop(_hop(labels).select("node", "lab")).localCheckpoint(eager=False)
         changed = new_labels.agg(
             F.coalesce(F.sum(F.col("moved").cast("long")), F.lit(0))
         ).first()[0]
         labels = new_labels.select("node", "lab")
         rnd += 1
-        if changed == 0:
-            break
     edges.unpersist()
     iterstats.record(what, rnd)
     if changed != 0:
         raise RuntimeError(
-            f"{what}: did not converge within {max_rounds} rounds — graph has a "
+            f"{what}: did not converge within {cap} rounds — graph has a "
             f"longer chain than expected"
         )
     return labels

@@ -187,17 +187,15 @@ def _normalized(emb: DataFrame) -> DataFrame:
     )
 
 
-def _hyperplanes(n_bits: int, dim: int, seed: int = 20260813) -> list[list[float]]:
+def _hyperplanes(n_bits: int, dim: int) -> list[list[float]]:
     """Deterministic Rademacher (+-1) hyperplanes for signed random
     projection. Python's seeded Mersenne Twister is platform-stable, so
     signatures are reproducible across runs and engines."""
-    rng = random.Random(seed)
+    rng = random.Random(20260813)
     return [[float(rng.choice((-1.0, 1.0))) for _ in range(dim)] for _ in range(n_bits)]
 
 
-def srp_banded(
-    vecs: DataFrame, n_bands: int, rows_per_band: int, seed: int = 20260813
-) -> DataFrame:
+def srp_banded(vecs: DataFrame, n_bands: int, rows_per_band: int) -> DataFrame:
     """(vec_id, band, bh): signed-random-projection LSH bucket keys.
 
     bit_j = sign(<nemb, h_j>) for Rademacher hyperplane h_j; rows_per_band
@@ -217,7 +215,7 @@ def srp_banded(
     the wire, and the per-group sum accumulates in dimension order
     (matching the old left-to-right fold bit-for-bit)."""
     n_bits = n_bands * rows_per_band
-    planes = _hyperplanes(n_bits, EMBEDDING_DIM, seed)
+    planes = _hyperplanes(n_bits, EMBEDDING_DIM)
     # Rademacher planes are ±1, so each plane packs into a 64-bit sign
     # mask and the product x*h_jd becomes a two-instruction branch on
     # bit d — no per-row array materialization (a literal F.array
@@ -261,12 +259,7 @@ def srp_banded(
 
 
 def dedup_embedding_pairs(
-    emb: DataFrame,
-    theta: float,
-    n_bands: int,
-    rows_per_band: int,
-    seed: int = 20260813,
-    collapse_exact: bool = True,
+    emb: DataFrame, theta: float, n_bands: int, rows_per_band: int
 ) -> DataFrame:
     """Cosine >= theta pairs via exact-duplicate collapse + SRP-LSH
     buckets: collapse byte-identical vectors to one representative, band
@@ -284,9 +277,9 @@ def dedup_embedding_pairs(
     is keyed by vec_id, not bucket; at production theta the 6-8-bit keys
     fragment buckets and candidates collapse to true near-dups.
 
-    WHY THE COLLAPSE IS THE DEFAULT (tools/scale_stress.py --amp 100,
-    2026-08-14): on a 100x-amplified corpus where every vector has 99
-    EXACT copies, banding the raw corpus made the bucket self-join
+    WHY THE COLLAPSE (tools/scale_stress.py --amp 100, 2026-08-14): on
+    a 100x-amplified corpus where every vector has 99 EXACT copies,
+    banding the raw corpus made the bucket self-join
     candidate-quadratic in copy count (~10^10 candidate rows), spilled
     ~75 GB of shuffle and died on disk. Collapsing exact duplicates
     FIRST bounds every bucket's group size by the corpus's DISTINCT
@@ -294,26 +287,19 @@ def dedup_embedding_pairs(
     theta is what it is) but never candidate work. Expansion is pure
     output: same-class pairs carry the class's self-cosine, cross-class
     pairs inherit the rep pair's cosine — float-identical to computing
-    per member, since members are byte-identical to their rep.
-    ``collapse_exact=False`` keeps the raw-corpus banding as a
-    test/research dial (tests assert both tiers agree); it is NOT a
-    100 TB path on duplicate-dense corpora."""
-    if collapse_exact:
-        # rep_id = min vec_id over byte-identical embedding content; one
-        # hash-partitioned window shuffle keyed by the vector itself.
-        classes = emb.select(
-            "vec_id",
-            F.min("vec_id").over(Window.partitionBy("embedding")).alias("rep_id"),
-        ).persist()
-        reps = emb.join(
-            classes.filter(F.col("vec_id") == F.col("rep_id")).select("vec_id"),
-            "vec_id",
-        )
-    else:
-        classes = None
-        reps = emb
+    per member, since members are byte-identical to their rep."""
+    # rep_id = min vec_id over byte-identical embedding content; one
+    # hash-partitioned window shuffle keyed by the vector itself.
+    classes = emb.select(
+        "vec_id",
+        F.min("vec_id").over(Window.partitionBy("embedding")).alias("rep_id"),
+    ).persist()
+    reps = emb.join(
+        classes.filter(F.col("vec_id") == F.col("rep_id")).select("vec_id"),
+        "vec_id",
+    )
     n = _normalized(reps)
-    banded = srp_banded(n.select("vec_id", "nemb"), n_bands, rows_per_band, seed)
+    banded = srp_banded(n.select("vec_id", "nemb"), n_bands, rows_per_band)
     # Self-join over a PERSISTED banded table — deliberately NOT the
     # bucket-collect pair expansion minhash uses (llm_dedup.bucket_pairs):
     # low-theta SRP banding has FEW, HUGE buckets (2-bit keys => 4
@@ -347,8 +333,6 @@ def dedup_embedding_pairs(
         .filter(cos >= theta)
         .select("vec_a", "vec_b", F.round(cos, 6).alias("cos_sim"))
     )
-    if not collapse_exact:
-        return rep_pairs
     # Expansion back to member pairs — output-bound by construction.
     # Cross-class: every member of class(a) x every member of class(b);
     # classes are disjoint so least/greatest never collides with the
@@ -367,8 +351,8 @@ def dedup_embedding_pairs(
     )
     # Same-class: all intra-class pairs at the class's self-cosine
     # (dot(nemb, nemb) — the exact value dot(na, nb) yields for two
-    # byte-identical members, so the collapsed and raw tiers agree
-    # bit-for-bit). The theta filter still applies uniformly.
+    # byte-identical members, so the expansion equals the per-member
+    # cosine bit-for-bit). The theta filter still applies uniformly.
     sc = dot(F.col("nemb"), F.col("nemb"))
     selfcos = n.filter(sc >= theta).select(
         F.col("vec_id").alias("rep_id"), F.round(sc, 6).alias("cos_sim")
@@ -425,10 +409,10 @@ def dedup_embedding(t: Tables) -> DataFrame:
     would use ~0.95+).
 
     Implementation is the collapsed SRP-LSH bucketed path
-    (dedup_embedding_pairs, collapse_exact=True — the production shape
-    after the measured x100 duplicate-dense boundary): exact-duplicate
-    collapse, candidates from 24 bands x 2 bits over representatives,
-    exact cosine verify of rep candidates only, member expansion — no
+    (dedup_embedding_pairs — the production shape after the measured
+    x100 duplicate-dense boundary): exact-duplicate collapse,
+    candidates from 24 bands x 2 bits over representatives, exact
+    cosine verify of rep candidates only, member expansion — no
     nested-loop join anywhere in the plan (plan-asserted in tests). The
     oracle stays the all-pairs SQL: at theta=0.35 the r=2/b=24 banding
     has per-pair miss probability ~1.2e-5 and measured recall 1.0 on the

@@ -2,6 +2,12 @@
 at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
+Usage: python bench.py [NAME ...]
+
+A NAME is a HEADLINE name or a registry key; the default is every
+HEADLINE name. Any NAME is timed the same way, and the JSON's
+``queries`` is keyed by the names given. Exit code 2 on an unknown name.
+
 Each query runs three times through the no-op sink
 (base_etl_spark.session.execute_fully), which materializes every
 column; the reported number is the best (warm) run, matching
@@ -42,20 +48,14 @@ LOAD_WAIT_SECS = 900
 OTHER_CPU_BAR = 2.0
 
 
-def _loadavg_1min() -> float | None:
+def _loadavg() -> tuple[float | None, float | None]:
+    """(1-min, 5-min) load average."""
     try:
         with open("/proc/loadavg") as f:
-            return float(f.read().split()[0])
-    except (OSError, ValueError, IndexError):
-        return None  # non-Linux: no guard, JSON carries null
-
-
-def _loadavg_5min() -> float | None:
-    try:
-        with open("/proc/loadavg") as f:
-            return float(f.read().split()[1])
-    except (OSError, ValueError, IndexError):
-        return None
+            one, five = f.read().split()[:2]
+        return float(one), float(five)
+    except (OSError, ValueError):
+        return None, None  # non-Linux: no guard, JSON carries null
 
 
 def _is_dirty(load: float | None, load5: float | None) -> bool:
@@ -68,7 +68,7 @@ def _wait_for_quiet(wait_secs: int) -> tuple[float | None, float | None, bool]:
     """Returns (loadavg_1min, loadavg_5min, timed_out). timed_out=True
     means the box never went quiet inside the deadline and the run
     proceeded anyway, so the JSON marks itself contaminated."""
-    load, load5 = _loadavg_1min(), _loadavg_5min()
+    load, load5 = _loadavg()
     if load is None:
         return None, None, False
     deadline = time.time() + wait_secs
@@ -79,7 +79,7 @@ def _wait_for_quiet(wait_secs: int) -> tuple[float | None, float | None, bool]:
             f" — waiting for quiet box", file=sys.stderr,
         )
         time.sleep(15)
-        load, load5 = _loadavg_1min(), _loadavg_5min()
+        load, load5 = _loadavg()
     return load, load5, _is_dirty(load, load5)
 
 
@@ -129,8 +129,15 @@ ANCHORS = {
 }
 
 
-def main() -> None:
+def main(names: list[str] | None = None) -> int:
     from base_etl_spark import build_session, execute_fully, queries
+
+    qs = queries()
+    names = names or list(HEADLINE)
+    unknown = [n for n in names if HEADLINE.get(n, n) not in qs]
+    if unknown:
+        print(f"unknown names: {unknown}", file=sys.stderr)
+        return 2
 
     load_start, load5_start, wait_timed_out = _wait_for_quiet(LOAD_WAIT_SECS)
     spark = build_session(
@@ -145,7 +152,6 @@ def main() -> None:
     # TakeOrderedAndProject before the window; audited in
     # tests/test_plans.py) but bury real signal in the bench tail.
     spark.sparkContext.setLogLevel("ERROR")
-    qs = queries()
     sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else -1.0
 
     times: dict[str, float] = {}
@@ -167,9 +173,10 @@ def main() -> None:
         other = stamp.other_cpu_s()
         return attempts, other, other >= OTHER_CPU_BAR * (time.time() - t_start)
 
-    for name, key in HEADLINE.items():
+    for name in names:
+        key = HEADLINE.get(name, name)
         fn = qs[key]
-        key_loads[name] = [_loadavg_1min(), _loadavg_5min()]
+        key_loads[name] = list(_loadavg())
         attempts, other, dirty = _stamped_best_of_3(fn)
         key_other_cpu[name] = round(other, 3)
         if dirty:
@@ -205,7 +212,7 @@ def main() -> None:
         print(f"# {name} ({key}): {times[name]}s, {n} rows", file=sys.stderr)
 
     total = round(sum(times.values()), 3)
-    load_end = _loadavg_1min()
+    load_end = _loadavg()[0]
     # Contaminated iff the box was dirty when we started (including a
     # timed-out quiet wait) OR any key's stamp was dirty.
     contaminated = (
@@ -233,7 +240,8 @@ def main() -> None:
             }
         )
     )
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))

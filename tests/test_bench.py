@@ -29,6 +29,26 @@ def test_bench_main_smoke(spark, monkeypatch, capsys):
     assert "value_warm2" not in out
 
 
+def test_bench_times_a_registry_key_by_name(spark, monkeypatch, capsys):
+    monkeypatch.setattr(base_etl_spark, "build_session", lambda *a, **k: spark)
+    monkeypatch.setattr(bench, "LOAD_WAIT_SECS", 0)
+    monkeypatch.setattr(bench, "SF_DIR", SF_TEST)
+    assert "graph_degree_distribution" not in bench.HEADLINE.values()
+    assert bench.main(["graph_degree_distribution"]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert set(out["queries"]) == {"graph_degree_distribution"}
+    assert out["value"] == out["queries"]["graph_degree_distribution"] > 0
+    assert out["retried_keys"] == []
+
+
+def test_bench_rejects_unknown_name_before_session(monkeypatch):
+    def _no_session(*a, **k):
+        raise AssertionError("session built for an unknown name")
+
+    monkeypatch.setattr(base_etl_spark, "build_session", _no_session)
+    assert bench.main(["q1", "no_such_key"]) == 2
+
+
 def test_contention_stamp_sees_orphaned_busy_loop():
     # the shell exits at once, so the loop is reparented away from this
     # process tree and must count as another tenant's CPU

@@ -1,8 +1,11 @@
 """Sampled parallelism-invariance regression guard (SURVEY §2.16 item 7).
 
-The full sweep lives in tools/invariance_check.py (254/254 invariant at
-HEAD); re-running all keys per pytest run is too slow, so this pins the
-property on the keys whose shapes were historically at risk:
+The full sweep is the exit gate's invariance stages: tools/check.py
+under SPARK_GRAFT_CPUS=3, judged against the DuckDB oracle, while this
+suite and the default check.py run judge the usual fan-out. Re-running
+all keys per pytest run is too slow, so this pins the property in one
+session, shuffle partitions 3 vs 8, on the keys whose shapes were
+historically at risk:
 
 - agg_argmax: WAS parallelism-dependent on duplicate (user_id, ts)
   until the fuzz wave gave it a unique composite order key — the one

@@ -620,8 +620,10 @@ def test_max_partition_bytes_governs_scan_parallelism(spark, tables, tmp_path):
 def test_bloom_prefilter_plan_shape(spark):
     """The bucket prune must be a broadcast LEFT SEMI ahead of the fact
     shuffle, and the exact join must stay sort-merge (the modeled
-    regime is the fact-fact one — see tools/bloom_ab.py for why the
-    built-in runtime filter can't be relied on for it)."""
+    regime is the fact-fact one, where Spark's built-in runtime filter
+    is gated on the unfiltered scan-size estimate; measured at x30 with
+    broadcast off: plain shuffle join 1.386 s, bloom-injected 1.104 s,
+    broadcast 0.800 s)."""
     import re
 
     df = _QS["join_bloom_prefilter"](spark, SF_TEST)

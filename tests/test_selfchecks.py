@@ -170,12 +170,11 @@ def test_dedup_embedding_lsh_planted_high_cosine(spark):
 
 
 def test_dedup_embedding_collapse_exact_duplicates(spark):
-    """The duplicate-dense regime that killed the raw-banding tier at
-    x100 (measured: candidate-quadratic bucket self-join, ~75 GB spill):
-    byte-identical copies of base vectors. The default collapsed path
-    must equal BOTH the all-pairs oracle and the raw-banding research
-    dial — same-class pairs at the class self-cosine, cross-class pairs
-    at the rep cosine, all orderings vec_a < vec_b."""
+    """The duplicate-dense regime that killed raw-corpus banding at x100
+    (measured: candidate-quadratic bucket self-join, ~75 GB spill):
+    byte-identical copies of base vectors. The collapsed path must equal
+    the all-pairs oracle — same-class pairs at the class self-cosine,
+    cross-class pairs at the rep cosine, all orderings vec_a < vec_b."""
     import random
 
     from base_etl_spark.operators.llm_vectors import (
@@ -205,18 +204,27 @@ def test_dedup_embedding_collapse_exact_duplicates(spark):
         tuple(r)
         for r in dedup_embedding_pairs(emb, 0.95, n_bands=8, rows_per_band=6).collect()
     }
-    raw = {
-        tuple(r)
-        for r in dedup_embedding_pairs(
-            emb, 0.95, n_bands=8, rows_per_band=6, collapse_exact=False
-        ).collect()
-    }
     ap = {tuple(r) for r in dedup_embedding_allpairs(emb, 0.95).collect()}
     assert collapsed == ap
-    assert raw == ap
     # every planted copy class of size 4 contributes C(4,2)=6 pairs
     assert len(ap) >= 24
     assert all(a < b for a, b, _ in ap)
+
+
+def test_propagate_min_labels_planted_components(spark):
+    """Min-label propagation on a planted pair graph: a 9-node chain whose
+    minimum sits at one end (four moving rounds of two hops, then one
+    quiet round) and a 4-node component listed against id order. Every
+    node ends on its component's minimum and the rounds are recorded."""
+    from base_etl_spark import iterstats
+    from base_etl_spark.operators.llm_dedup import _propagate_min_labels
+
+    chain = [(i + 1, i) for i in range(1, 9)]
+    other = [(23, 21), (22, 23), (20, 22)]
+    pairs = spark.createDataFrame(chain + other, "doc_a long, doc_b long")
+    labels = {r.node: r.lab for r in _propagate_min_labels(pairs, what="planted").collect()}
+    assert labels == {**dict.fromkeys(range(1, 10), 1), **dict.fromkeys(range(20, 24), 20)}
+    assert iterstats.ITER_ROUNDS["planted"] == 5
 
 
 def test_corpus_clean_consistent_with_stage_operators(spark):

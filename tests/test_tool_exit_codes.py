@@ -22,7 +22,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TOOLS = [
     "check.py",
     "exit_gate.py",
-    "invariance_check.py",
     "scale_stress.py",
 ]
 
@@ -37,13 +36,18 @@ def test_main_block_propagates_status(tool: str) -> None:
     )
 
 
-def test_exit_gate_forced_fail_stage(tmp_path, monkeypatch) -> None:
-    """A stage whose subprocess exits 1 must surface as FAIL + exit 1."""
+def _exit_gate():
     sys.path.insert(0, os.path.join(REPO, "tools"))
     try:
         import exit_gate
     finally:
         sys.path.pop(0)
+    return exit_gate
+
+
+def test_exit_gate_forced_fail_stage(tmp_path, monkeypatch) -> None:
+    """A stage whose subprocess exits 1 must surface as FAIL + exit 1."""
+    exit_gate = _exit_gate()
 
     out = str(tmp_path / "gate.json")
     fake = [
@@ -63,6 +67,26 @@ def test_exit_gate_forced_fail_stage(tmp_path, monkeypatch) -> None:
     monkeypatch.setattr(exit_gate, "STAGES", fake[:1])
     rc = exit_gate.main()
     assert rc == 0 and json.load(open(out))["pass"] is True
+
+
+def test_invariance_stages_run_check_at_three_cpus() -> None:
+    """The fan-out invariance stages are the oracle sweep at an awkward
+    parallelism, not a separate diff tool."""
+    stages = {name: cmd for name, cmd in _exit_gate().STAGES if name.startswith("invariance_")}
+    assert set(stages) == {"invariance_sf0001", "invariance_sf001"}
+    for name, cmd in stages.items():
+        assert cmd[:2] == ["env", "SPARK_GRAFT_CPUS=3"], (name, cmd)
+        assert cmd[3] == "tools/check.py", (name, cmd)
+
+
+def test_scale_stage_runs_every_headline_key() -> None:
+    import bench
+    from tools.scale_stress import ITERATIVE_KEYS
+
+    cmd = dict(_exit_gate().STAGES)["scale_x10"]
+    keys = cmd[cmd.index("10") + 1:]
+    assert keys == list(bench.HEADLINE.values()) + sorted(ITERATIVE_KEYS)
+    assert "dedup_quality_survivor" in keys
 
 
 def _check(*args: str) -> subprocess.CompletedProcess:
