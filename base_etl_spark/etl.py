@@ -1149,15 +1149,9 @@ def etl_time_travel(t: Tables) -> DataFrame:
     base. The LWW merge is the etl_cdc_apply window on (key, version)."""
     from pyspark.sql import Window as W
 
-    from base_etl_spark.sinks import (
-        _derived_path,
-        _ensure_derived,
-        _source_fingerprint,
-        read_derived,
-        write_parquet,
-    )
+    from base_etl_spark.sinks import read_derived, scratch_path, write_parquet
 
-    path = _derived_path(t.sf_dir, "customer_versions")
+    path = scratch_path(t.sf_dir, "customer_versions")
     base = t.customer.select(
         "c_custkey", "c_acctbal", F.lit(1).alias("version"), F.lit("u").alias("op")
     )
@@ -1170,18 +1164,13 @@ def etl_time_travel(t: Tables) -> DataFrame:
             F.when(F.col("c_custkey") % 31 == 0, "d").otherwise("u").alias("op"),
         )
     )
-    _ensure_derived(
-        path,
-        _source_fingerprint(t.sf_dir, "customer"),
-        lambda p: write_parquet(base.unionByName(delta), p, partition_by=["version"]),
-    )
-
-    changelog_schema = base.unionByName(delta).schema
+    changelog = base.unionByName(delta)
+    write_parquet(changelog, path, partition_by=["version"])
 
     def read_asof(v: int):
         # explicit schema: a zero-row source writes a version-partitioned
         # layout with no part files (see sinks.read_derived)
-        hist = read_derived(t.spark, path, changelog_schema).filter(
+        hist = read_derived(t.spark, path, changelog.schema).filter(
             F.col("version") <= v
         )
         w = W.partitionBy("c_custkey").orderBy(F.desc("version"))

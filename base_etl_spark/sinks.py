@@ -14,7 +14,11 @@ Engine policy for 100 TB writes:
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
@@ -33,12 +37,14 @@ def write_parquet(
 ) -> None:
     """Partitioned parquet sink. partition_by columns should be
     low-cardinality (date, region); high-cardinality partitioning
-    produces the small-files problem at scale."""
+    produces the small-files problem at scale. An overwrite replaces
+    everything under ``path``: partition overwrite is pinned to static,
+    whatever the session's ``spark.sql.sources.partitionOverwriteMode``."""
     if target_partitions:
         df = df.repartition(target_partitions, *(partition_by or []))
     w = df.write.mode(mode)
     if partition_by:
-        w = w.partitionBy(*partition_by)
+        w = w.option("partitionOverwriteMode", "static").partitionBy(*partition_by)
     w.parquet(path)
 
 
@@ -199,151 +205,23 @@ def read_json(spark, path: str, schema=None) -> DataFrame:
     return r.json(path)
 
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_SCRATCH_ROOT: str | None = None
 
 
-def _derived_path(sf_dir: str, name: str) -> str:
-    """Deterministic scratch location for derived-format fixture copies,
-    namespaced by scale-factor directory so sf0.001/sf0.01 runs never
-    collide. Lives inside the repo (gitignored) — the sandbox forbids
-    writes elsewhere."""
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join(_REPO_ROOT, ".derived", sf_tag, name)
-
-
-def _source_fingerprint(sf_dir: str, *tables: str) -> str:
-    """Cheap content-state key for fixture sources: (size, mtime_ns) of
-    each source parquet file. Strictly stronger than a row count — it
-    catches fixture regeneration that happens to preserve row count
-    (re-seeded data, schema tweaks, dirty-CSV edits) — and cheaper: a
-    stat() instead of a Spark count() job per invocation."""
-    parts = []
-    for name in tables:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        try:
-            st = os.stat(p)
-            parts.append(f"{name}:{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            parts.append(f"{name}:absent")
-    return "|".join(parts)
-
-
-def _ensure_derived(path: str, state_key: str, build) -> None:
-    """Materialize a derived layout at most once per source state.
-
-    Repeated invocations (bench loops, the driver's warm runs, parallel
-    test sessions) previously rewrote the same shared path every time —
-    charging the rewrite to whichever query ran it and racing when two
-    sessions hit one path concurrently. Three guarantees:
-
-    - **Reuse keyed on source content**, not row count: ``state_key``
-      carries the source files' size+mtime fingerprint
-      (``_source_fingerprint``), so a regenerated fixture with the same
-      row count still triggers a rebuild.
-    - **Single builder**: an O_EXCL lock file serializes concurrent
-      sessions; losers poll for the winner's marker instead of
-      double-building. Staleness is judged by the LOCK FILE's own mtime
-      age (not the waiter's wait time), and a stale unlink re-enters the
-      O_EXCL race instead of assuming ownership — so two waiters that
-      both see a dead builder's lock cannot both steal it and build
-      concurrently.
-    - **Atomic data swap**: ``build(tmp_path)`` writes into a scratch
-      directory which is renamed over the target, so a reader never sees
-      a half-written layout — at worst a briefly missing directory, which
-      fails loudly. The ``.done`` marker is itself written atomically
-      AFTER the swap."""
-    import shutil
-    import time as _time
-
-    marker = path + ".done"
-
-    def _fresh() -> bool:
-        try:
-            with open(marker) as f:
-                return f.read() == state_key
-        except OSError:
-            return False
-
-    if _fresh():
-        return
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    lock = path + ".lock"
-
-    def _lock_owner_dead() -> bool:
-        # The lock records its owner's pid; a recorded pid that still
-        # exists means the builder is LIVE no matter how old the lock is
-        # (a >300 s legitimate build must not get its lock stolen and its
-        # scratch dir rmtree'd mid-write). Unreadable/empty/foreign
-        # content falls back to age-only staleness.
-        try:
-            with open(lock) as f:
-                pid = int(f.read().strip() or "0")
-        except (OSError, ValueError):
-            return True  # vanished or unparseable — age check governs
-        if pid <= 0:
-            return True
-        try:
-            os.kill(pid, 0)
-            return False  # owner process exists
-        except ProcessLookupError:
-            return True
-        except PermissionError:
-            return False  # exists, owned by another user
-
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, str(os.getpid()).encode())
-            os.close(fd)
-            break
-        except FileExistsError:
-            _time.sleep(0.2)
-            if _fresh():
-                return
-            try:
-                # stale = the LOCK ITSELF is old (builder died) AND its
-                # recorded owner pid is gone; a live builder keeps its
-                # lock however long the build takes. The absolute
-                # ceiling defeats pid reuse: if a crashed builder's pid
-                # was recycled by an unrelated long-lived process,
-                # _lock_owner_dead stays False forever — but no
-                # legitimate fixture build runs for hours, so a lock
-                # that old is stolen regardless of pid liveness.
-                age = _time.time() - os.stat(lock).st_mtime
-                if age > 4 * 3600 or (age > 300 and _lock_owner_dead()):
-                    os.unlink(lock)
-                    # no ownership claimed: loop back into the O_EXCL
-                    # race so at most one stealer wins
-            except OSError:
-                pass  # lock vanished — re-enter the race
-    try:
-        if _fresh():  # another session built it while we waited
-            return
-        # prune scratch dirs left by DEAD builders of any pid (a killed
-        # build would otherwise leak its multi-MB tmp dir forever); safe
-        # under the lock — no live builder exists besides us
-        import glob as _glob
-
-        for orphan in _glob.glob(path + ".build*"):
-            shutil.rmtree(orphan, ignore_errors=True)
-        tmp = f"{path}.build{os.getpid()}"
-        build(tmp)
-        shutil.rmtree(path, ignore_errors=True)
-        os.replace(tmp, path)
-        mtmp = f"{marker}.tmp{os.getpid()}"
-        with open(mtmp, "w") as f:
-            f.write(state_key)
-        os.replace(mtmp, marker)
-    finally:
-        # ownership-checked release: unlink only OUR lock — if a (buggy
-        # or misjudged) stealer replaced it, freeing the stealer's lock
-        # here would admit a third concurrent builder
-        try:
-            with open(lock) as f:
-                if f.read().strip() == str(os.getpid()):
-                    os.unlink(lock)
-        except OSError:
-            pass
+def scratch_path(sf_dir: str, name: str) -> str:
+    """Where a write key puts its layout ``name`` for the fixture
+    directory ``sf_dir``: under one temporary root private to this
+    process (made on first use, removed at interpreter exit), with one
+    subdirectory per fixture directory. Keys overwrite it on every call,
+    so a call never reuses another call's output and no path is shared
+    between processes."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="base_etl_spark_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, True)
+    sf = os.path.abspath(sf_dir)
+    sub = f"{os.path.basename(sf)}_{hashlib.sha1(sf.encode()).hexdigest()[:8]}"
+    return os.path.join(_SCRATCH_ROOT, sub, name)
 
 
 def read_derived(spark, path: str, schema) -> DataFrame:
@@ -361,20 +239,16 @@ def read_derived(spark, path: str, schema) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
-def _ensure_orders_by_year(t: Tables):
-    """The shared year-partitioned orders layout (scan_partitioned_pruned
+def _write_orders_by_year(t: Tables):
+    """Write the year-partitioned orders layout (scan_partitioned_pruned
     reads it with a literal filter; join_dpp_runtime with a dim-driven
     runtime filter). ONE definition so the two queries can never disagree
-    about the path, fingerprint, partition column, or read schema.
-    Returns ``(path, schema)`` — readers must pass the schema through
+    about the path, partition column, or read schema. Returns
+    ``(path, schema)`` — readers must pass the schema through
     ``read_derived`` (see there for the empty-layout rationale)."""
-    path = _derived_path(t.sf_dir, "orders_by_year")
+    path = scratch_path(t.sf_dir, "orders_by_year")
     layout = t.orders.withColumn("o_year", F.year("o_orderdate"))
-    _ensure_derived(
-        path,
-        _source_fingerprint(t.sf_dir, "orders"),
-        lambda p: write_parquet(layout, p, partition_by=["o_year"]),
-    )
+    write_parquet(layout, path, partition_by=["o_year"])
     return path, layout.schema
 
 
@@ -401,7 +275,7 @@ def scan_csv_agg(t: Tables) -> DataFrame:
     full extra pass), and CSV splits by line so reads parallelize; CSV is
     an ingestion format here — no pushdown or column pruning, convert to
     parquet at the lake edge."""
-    path = _derived_path(t.sf_dir, "customer_csv")
+    path = scratch_path(t.sf_dir, "customer_csv")
     write_csv(t.customer, path)
     df = read_csv(t.spark, path, schemas.CUSTOMER)
     return df.groupBy("c_mktsegment").agg(
@@ -432,7 +306,7 @@ def scan_json_agg(t: Tables) -> DataFrame:
     every byte of every record — explicit schema avoids the inference
     pass, and nothing pushes down; like CSV it is an edge-ingestion
     format to be converted to parquet once."""
-    path = _derived_path(t.sf_dir, "part_json")
+    path = scratch_path(t.sf_dir, "part_json")
     write_json(t.part, path)
     df = read_json(t.spark, path, schemas.PART)
     return df.groupBy("p_brand").agg(
@@ -471,7 +345,7 @@ def scan_partitioned_pruned(t: Tables) -> DataFrame:
     key turns every time-bounded query from a full scan into a touched-
     partition scan. Low-cardinality keys only (a high-cardinality
     partition key is the small-files anti-pattern)."""
-    path, schema = _ensure_orders_by_year(t)
+    path, schema = _write_orders_by_year(t)
     pruned = read_derived(t.spark, path, schema).filter(F.col("o_year") == 1997)
     return pruned.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -505,22 +379,17 @@ def join_bucketed_colocated(t: Tables) -> DataFrame:
     partition size)."""
     tag = _sf_tag(t.sf_dir)
     orders_tbl, lineitem_tbl = f"be_orders_bkt_{tag}", f"be_lineitem_bkt_{tag}"
-    # the bucketed write is the once-per-layout amortized cost — memoized
-    # on the session catalog so repeated invocations (bench warm loops)
-    # measure the co-located JOIN, not a re-shuffle-and-rewrite
-    if not t.spark.catalog.tableExists(orders_tbl):
-        write_bucketed(
-            t.orders.select("o_orderkey", "o_orderstatus"), orders_tbl, "o_orderkey", 8,
-            path=_derived_path(t.sf_dir, "orders_bkt"),
-        )
-    if not t.spark.catalog.tableExists(lineitem_tbl):
-        write_bucketed(
-            t.lineitem.select("l_orderkey", "l_extendedprice", "l_discount"),
-            lineitem_tbl,
-            "l_orderkey",
-            8,
-            path=_derived_path(t.sf_dir, "lineitem_bkt"),
-        )
+    write_bucketed(
+        t.orders.select("o_orderkey", "o_orderstatus"), orders_tbl, "o_orderkey", 8,
+        path=scratch_path(t.sf_dir, "orders_bkt"),
+    )
+    write_bucketed(
+        t.lineitem.select("l_orderkey", "l_extendedprice", "l_discount"),
+        lineitem_tbl,
+        "l_orderkey",
+        8,
+        path=scratch_path(t.sf_dir, "lineitem_bkt"),
+    )
     o = t.spark.table(orders_tbl)
     li = t.spark.table(lineitem_tbl)
     return (
@@ -559,15 +428,14 @@ def join_dpp_runtime(t: Tables) -> DataFrame:
     covers the star-join case where the selective predicate lives on the
     dimension — at 100 TB the difference between scanning 25 years and 2.
     """
-    fact_path, fact_schema = _ensure_orders_by_year(t)
-    src_key = _source_fingerprint(t.sf_dir, "orders")
-    dim_path = _derived_path(t.sf_dir, "year_dim")
+    fact_path, fact_schema = _write_orders_by_year(t)
+    dim_path = scratch_path(t.sf_dir, "year_dim")
     years = (
         t.orders.select(F.year("o_orderdate").alias("year"))
         .distinct()
         .withColumn("era", F.when(F.col("year") >= 2000, "modern").otherwise("classic"))
     )
-    _ensure_derived(dim_path, src_key, lambda p: write_parquet(years, p))
+    write_parquet(years, dim_path)
     fact = read_derived(t.spark, fact_path, fact_schema)
     dim = t.spark.read.parquet(dim_path).filter(F.col("era") == "modern")
     return (
@@ -602,9 +470,9 @@ def etl_compaction(t: Tables) -> DataFrame:
     (spark.sql.files.maxPartitionBytes-aligned); repartition — never
     coalesce(1) — keeps the write itself parallel."""
     cols = ["l_orderkey", "l_linenumber", "l_returnflag", "l_extendedprice"]
-    frag = _derived_path(t.sf_dir, "lineitem_fragmented")
+    frag = scratch_path(t.sf_dir, "lineitem_fragmented")
     t.lineitem.select(*cols).repartition(64).write.mode("overwrite").parquet(frag)
-    compact = _derived_path(t.sf_dir, "lineitem_compacted")
+    compact = scratch_path(t.sf_dir, "lineitem_compacted")
     t.spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(compact)
     return (
         t.spark.read.parquet(compact)
@@ -643,7 +511,7 @@ def scan_schema_evolution(t: Tables) -> DataFrame:
     (expensive on huge file counts) — production pins the merged schema
     in a catalog/metastore and passes it explicitly; the read semantics
     (missing columns → NULL) are identical."""
-    root = _derived_path(t.sf_dir, "orders_evolving")
+    root = scratch_path(t.sf_dir, "orders_evolving")
     old_gen = t.orders.filter(F.year("o_orderdate") < 1999)
     new_gen = t.orders.filter(F.year("o_orderdate") >= 1999).withColumn(
         "sales_channel", F.col("o_orderpriority")
@@ -689,7 +557,7 @@ def etl_forget_users(t: Tables) -> DataFrame:
     Delta) turn this into a metadata operation; the anti-join rewrite is
     the format-agnostic floor."""
     forget = t.events.select("user_id").distinct().filter(F.col("user_id") % 29 == 3)
-    cleaned_path = _derived_path(t.sf_dir, "events_forgotten")
+    cleaned_path = scratch_path(t.sf_dir, "events_forgotten")
     t.events.join(F.broadcast(forget), "user_id", "left_anti").write.mode(
         "overwrite"
     ).parquet(cleaned_path)
@@ -727,7 +595,7 @@ def etl_cluster_by_date(t: Tables) -> DataFrame:
     repartitionByRange(ts) + sortWithinPartitions keeps the write
     parallel AND the clustering global across files (file k's max <=
     file k+1's min, modulo range-sampling boundaries)."""
-    path = _derived_path(t.sf_dir, "lineitem_clustered")
+    path = scratch_path(t.sf_dir, "lineitem_clustered")
     (
         t.lineitem.repartitionByRange(8, "l_shipdate")
         .sortWithinPartitions("l_shipdate")
@@ -773,23 +641,14 @@ def scan_csv_permissive(t: Tables) -> DataFrame:
     load (and never DROPMALFORMED, which destroys the audit trail)."""
     from pyspark.sql.types import StringType, StructField, StructType
 
-    path = _derived_path(t.sf_dir, "customer_csv_dirty")
+    path = scratch_path(t.sf_dir, "customer_csv_dirty")
 
-    def build(p: str) -> None:
-        write_csv(t.customer, p)
-        bad = os.path.join(p, "zz_bad_lines.csv")
-        with open(bad, "w") as f:
-            f.write("c_custkey,c_name,c_nationkey,c_acctbal,c_mktsegment\n")  # per-file header
-            f.write("not_an_int,Broken Row 1,9,12.5,BUILDING\n")
-            f.write("42,Too,Few\n")
-            f.write("abc,def,ghi,jkl,mno\n")
-
-    # write-once is CORRECTNESS here, not just cost: the .cache() below
-    # registers an InMemoryRelation keyed on this plan, and a re-overwrite
-    # from a later invocation deletes the part files the cached file
-    # index still points at (measured: plans-sweep then correctness run
-    # read an empty/partial layout)
-    _ensure_derived(path, _source_fingerprint(t.sf_dir, "customer"), build)
+    write_csv(t.customer, path)
+    with open(os.path.join(path, "zz_bad_lines.csv"), "w") as f:
+        f.write("c_custkey,c_name,c_nationkey,c_acctbal,c_mktsegment\n")  # per-file header
+        f.write("not_an_int,Broken Row 1,9,12.5,BUILDING\n")
+        f.write("42,Too,Few\n")
+        f.write("abc,def,ghi,jkl,mno\n")
     schema = StructType(
         [*schemas.CUSTOMER.fields, StructField("_corrupt_record", StringType())]
     )
@@ -806,7 +665,10 @@ def scan_csv_permissive(t: Tables) -> DataFrame:
     # that), so the quarantine split materializes the parsed batch first —
     # which is also the production shape: parse once, then fan out the
     # good rows and the quarantine rows from the same materialization.
-    df = df.cache()
+    # A lazy local checkpoint, not .cache(): the cache manager would hand
+    # the next call this call's cached plan, whose file list the next
+    # call's overwrite refreshes before the bad-lines file is written.
+    df = df.localCheckpoint(eager=False)
     grouped = df.groupBy(
         F.col("_corrupt_record").isNotNull().alias("is_corrupt")
     ).agg(F.count(F.lit(1)).alias("n_rows"))
@@ -839,7 +701,7 @@ def scan_nested_struct(t: Tables) -> DataFrame:
     leaves (both plan-asserted), so deep document-style schemas keep
     columnar economics. The oracle computes the same answer from the
     ORIGINAL flat parquet."""
-    path = _derived_path(t.sf_dir, "orders_nested")
+    path = scratch_path(t.sf_dir, "orders_nested")
     nested = t.orders.select(
         "o_orderkey",
         "o_orderstatus",
@@ -879,7 +741,7 @@ def scan_orc_agg(t: Tables) -> DataFrame:
     pruning — same economics as parquet, different ecosystem: Hive/Trino
     shops); the round trip certifies type fidelity through the format
     boundary including timestamps."""
-    path = _derived_path(t.sf_dir, "orders_orc")
+    path = scratch_path(t.sf_dir, "orders_orc")
     t.orders.write.mode("overwrite").orc(path)
     return (
         t.spark.read.orc(path)
@@ -932,7 +794,7 @@ if _avro_available():  # pragma: no cover — jar absent in this sandbox
         every row deserializes — so it belongs at the ingest edge with a
         parquet conversion behind it; this key certifies type fidelity
         through the format boundary including timestamps."""
-        path = _derived_path(t.sf_dir, "orders_avro")
+        path = scratch_path(t.sf_dir, "orders_avro")
         t.orders.write.mode("overwrite").format("avro").save(path)
         return (
             t.spark.read.format("avro")
@@ -971,7 +833,7 @@ def scan_xml_agg(t: Tables) -> DataFrame:
     reader takes an explicit schema (inference costs a full extra pass)
     and parallelizes by file split like the JSON reader. Convert to
     parquet at the lake edge."""
-    path = _derived_path(t.sf_dir, "supplier_xml")
+    path = scratch_path(t.sf_dir, "supplier_xml")
     t.supplier.write.mode("overwrite").format("xml").option("rowTag", "supplier").save(path)
     return (
         t.spark.read.format("xml")
@@ -1038,15 +900,11 @@ def scan_text_lines(t: Tables) -> DataFrame:
     newline-sanitize step is the real-world contract: line-oriented
     formats cannot carry embedded newlines without a framing protocol
     (that upgrade path is JSON-lines, scan_json_agg)."""
-    path = _derived_path(t.sf_dir, "documents_txt")
+    path = scratch_path(t.sf_dir, "documents_txt")
     sanitized = t.documents.select(
         F.regexp_replace("text", "[\\r\\n]", " ").alias("value")
     )
-    _ensure_derived(
-        path,
-        _source_fingerprint(t.sf_dir, "documents"),
-        lambda p: sanitized.write.mode("overwrite").text(p),
-    )
+    sanitized.write.mode("overwrite").text(path)
     lines = t.spark.read.text(path)
     return lines.agg(
         F.count(F.lit(1)).alias("n_lines"),
@@ -1137,24 +995,18 @@ def scan_json_permissive(t: Tables) -> DataFrame:
     typed fields are right there)."""
     from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
-    path = _derived_path(t.sf_dir, "customer_jsonl_dirty")
+    path = scratch_path(t.sf_dir, "customer_jsonl_dirty")
 
-    def build(p: str) -> None:
-        (
-            t.customer.select(
-                F.to_json(F.struct("c_custkey", "c_acctbal", "c_mktsegment")).alias("j")
-            ).write.mode("overwrite").text(p)
-        )
-        bad = os.path.join(p, "zz_injected.jsonl")
-        with open(bad, "w") as f:
-            # type mismatch: custkey unparseable as long -> partial row
-            f.write('{"c_custkey": "not_an_int", "c_acctbal": 5.25, "c_mktsegment": "BUILDING"}\n')
-            # syntax error: unclosed object -> fully corrupt row
-            f.write('{"c_custkey": 77, "c_acctbal":\n')
-            # schema drift: unknown extra field -> good row
-            f.write('{"c_custkey": 900001, "c_acctbal": 12.75, "c_mktsegment": "DRIFT", "new_col": true}\n')
-
-    _ensure_derived(path, _source_fingerprint(t.sf_dir, "customer"), build)
+    t.customer.select(
+        F.to_json(F.struct("c_custkey", "c_acctbal", "c_mktsegment")).alias("j")
+    ).write.mode("overwrite").text(path)
+    with open(os.path.join(path, "zz_injected.jsonl"), "w") as f:
+        # type mismatch: custkey unparseable as long -> partial row
+        f.write('{"c_custkey": "not_an_int", "c_acctbal": 5.25, "c_mktsegment": "BUILDING"}\n')
+        # syntax error: unclosed object -> fully corrupt row
+        f.write('{"c_custkey": 77, "c_acctbal":\n')
+        # schema drift: unknown extra field -> good row
+        f.write('{"c_custkey": 900001, "c_acctbal": 12.75, "c_mktsegment": "DRIFT", "new_col": true}\n')
     schema = StructType(
         [
             StructField("c_custkey", LongType()),
@@ -1172,7 +1024,7 @@ def scan_json_permissive(t: Tables) -> DataFrame:
     # same materialize-then-fan-out stance as scan_csv_permissive (Spark
     # rejects plans pruned down to only the corrupt-record column, and
     # parse-once is the production shape anyway)
-    df = df.cache()
+    df = df.localCheckpoint(eager=False)
     cls = (
         F.when(F.col("_corrupt_record").isNull(), F.lit("good"))
         .when(F.col("c_acctbal").isNotNull(), F.lit("partial"))
@@ -1327,9 +1179,6 @@ def sink_ledger_census(t: Tables) -> DataFrame:
     is a metadata-scale scan. On a real deployment the same protocol
     rides foreachBatch against cloud storage with the ledger in the
     checkpoint volume."""
-    import shutil
-    import tempfile
-
     from base_etl_spark.streaming.jobs import make_ledger_append_sink
 
     spark = t.spark

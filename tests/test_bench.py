@@ -21,7 +21,11 @@ def test_bench_main_smoke(spark, monkeypatch, capsys):
     monkeypatch.setattr(bench, "HEADLINE", {"q1": "agg_pricing"})
     monkeypatch.setattr(bench, "LOAD_WAIT_SECS", 0)
     monkeypatch.setattr(bench, "SF_DIR", SF_TEST)
+    runs = []
+    execute = base_etl_spark.execute_fully
+    monkeypatch.setattr(base_etl_spark, "execute_fully", lambda df: runs.append(execute(df)))
     bench.main()
+    assert len(runs) % 3 == 1  # one untimed warm-up, then best-of-3 (per retry)
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["value"] == out["queries"]["q1"] > 0
     assert set(out["queries"]) == {"q1"}

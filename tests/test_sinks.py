@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from base_etl_spark import sinks
@@ -124,9 +125,7 @@ def test_read_jdbc_partitioned_and_pushdown(spark, tables):
     )
     assert set(c.lower() for c in sub.columns) == {"c_custkey", "c_acctbal"}
     assert sub.count() == tables.customer.filter("c_acctbal > 0").count()
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         sinks.read_jdbc(
             spark, url, "customer_jdbc", properties=_DERBY,
             partition_column="c_custkey",
@@ -171,12 +170,12 @@ def test_compaction_file_count_contract(spark):
     import os
 
     from base_etl_spark import queries
-    from base_etl_spark.sinks import _derived_path
+    from base_etl_spark.sinks import scratch_path
     from tests.conftest import SF_TEST
 
     queries()["etl_compaction"](spark, SF_TEST).collect()
-    frag = glob.glob(os.path.join(_derived_path(SF_TEST, "lineitem_fragmented"), "*.parquet"))
-    comp = glob.glob(os.path.join(_derived_path(SF_TEST, "lineitem_compacted"), "*.parquet"))
+    frag = glob.glob(os.path.join(scratch_path(SF_TEST, "lineitem_fragmented"), "*.parquet"))
+    comp = glob.glob(os.path.join(scratch_path(SF_TEST, "lineitem_compacted"), "*.parquet"))
     assert len(frag) == 64
     assert len(comp) == 4
 
@@ -203,159 +202,34 @@ def test_python_datasource_partition_plumbing(spark):
     assert small.select("id").distinct().count() == 100
 
 
-def test_ensure_derived_rebuilds_on_source_change(tmp_path):
-    """The reuse marker is keyed on the source files' size+mtime
-    fingerprint, so a regenerated fixture that preserves row count still
-    triggers a rebuild — and the data lands via tmp-dir + atomic rename."""
-    import os
-
-    from base_etl_spark.sinks import _ensure_derived, _source_fingerprint
-
-    src = tmp_path / "sf"
-    src.mkdir()
-    (src / "customer.parquet").write_bytes(b"v1-bytes")
-    target = str(tmp_path / "derived" / "layout")
-
-    builds = []
-
-    def build(p):
-        os.makedirs(p)
-        with open(os.path.join(p, "part-0"), "w") as f:
-            f.write(f"build{len(builds)}")
-        builds.append(p)
-
-    key1 = _source_fingerprint(str(src), "customer")
-    _ensure_derived(target, key1, build)
-    _ensure_derived(target, key1, build)  # cached: no second build
-    assert len(builds) == 1
-    assert os.path.isdir(target)  # tmp dir was renamed over the target
-    assert not os.path.exists(target + ".lock")
-
-    # same byte length, same row count story — only mtime moves
-    os.utime(src / "customer.parquet", ns=(1, 1))
-    key2 = _source_fingerprint(str(src), "customer")
-    assert key2 != key1
-    _ensure_derived(target, key2, build)
-    assert len(builds) == 2
-    with open(os.path.join(target, "part-0")) as f:
-        assert f.read() == "build1"
+# every layout each key writes under sinks.scratch_path
+_LAYOUTS = {
+    "scan_partitioned_pruned": ["orders_by_year"],
+    "join_dpp_runtime": ["orders_by_year", "year_dim"],
+    "join_bucketed_colocated": ["orders_bkt", "lineitem_bkt"],
+    "etl_time_travel": ["customer_versions"],
+    "scan_csv_permissive": ["customer_csv_dirty"],
+    "scan_json_permissive": ["customer_jsonl_dirty"],
+    "scan_text_lines": ["documents_txt"],
+}
 
 
-def test_ensure_derived_stale_lock_and_orphan_cleanup(tmp_path):
-    """A dead builder's stale lock (old mtime) is stolen through the
-    O_EXCL race, and scratch dirs leaked by killed builds of OTHER pids
-    are pruned under the lock."""
-    import os
+@pytest.mark.parametrize("key", sorted(_LAYOUTS))
+def test_write_key_rewrites_its_layout_on_every_call(key, spark, duck):
+    """A second call writes its layout again instead of reusing the
+    first call's: a file planted between the calls is gone, and the
+    second call's rows still equal the oracle."""
+    from base_etl_spark import compare, queries
+    from base_etl_spark.sinks import scratch_path
+    from tests.conftest import SF_TEST
 
-    from base_etl_spark.sinks import _ensure_derived
-
-    target = str(tmp_path / "layout")
-    os.makedirs(tmp_path, exist_ok=True)
-    # dead builder artifacts: stale lock + an orphan scratch dir
-    lock = target + ".lock"
-    open(lock, "w").close()
-    os.utime(lock, ns=(0, 0))  # epoch mtime => stale by any timeout
-    orphan = target + ".build99999"
-    os.makedirs(orphan)
-
-    def build(p):
-        os.makedirs(p)
-        open(os.path.join(p, "part-0"), "w").close()
-
-    _ensure_derived(target, "k1", build)
-    assert os.path.isdir(target)
-    assert not os.path.exists(orphan), "dead builder's scratch dir pruned"
-    assert not os.path.exists(lock)
-
-
-def test_ensure_derived_release_is_ownership_checked(tmp_path):
-    """If a stealer replaced our lock mid-build, release must NOT free
-    the stealer's lock (that would admit a third concurrent builder)."""
-    import os
-
-    from base_etl_spark.sinks import _ensure_derived
-
-    target = str(tmp_path / "layout")
-    lock = target + ".lock"
-
-    def build(p):
-        os.makedirs(p)
-        open(os.path.join(p, "part-0"), "w").close()
-        # simulate a (misjudged) stealer taking the lock mid-build
-        with open(lock, "w") as f:
-            f.write("999999")
-
-    _ensure_derived(target, "k1", build)
-    assert os.path.isdir(target)
-    assert os.path.exists(lock), "foreign lock left in place on release"
-    with open(lock) as f:
-        assert f.read() == "999999"
-    os.unlink(lock)
-
-
-def test_ensure_derived_live_owner_lock_not_stolen(tmp_path):
-    """A lock whose mtime is ancient but whose recorded owner pid is
-    ALIVE belongs to a legitimately slow (>300 s) build: waiters must
-    keep waiting instead of stealing it and pruning the live builder's
-    scratch dir mid-write."""
-    import os
-    import threading
-    import time
-
-    from base_etl_spark.sinks import _ensure_derived
-
-    target = str(tmp_path / "layout")
-    lock = target + ".lock"
-    with open(lock, "w") as f:
-        f.write(str(os.getpid()))  # a live owner (this very process)
-    # past the 300 s age threshold but under the absolute pid-reuse
-    # ceiling — the band where pid liveness governs
-    aged = time.time() - 600
-    os.utime(lock, (aged, aged))
-
-    built = []
-
-    def run():
-        _ensure_derived(target, "k1", lambda p: built.append(p))
-
-    t = threading.Thread(target=run, daemon=True)
-    t.start()
-    time.sleep(1.0)
-    assert t.is_alive(), "waiter stole a live owner's lock"
-    assert not built and os.path.exists(lock)
-    # the 'builder' finishes: marker appears, waiter returns without building
-    with open(target + ".done", "w") as f:
-        f.write("k1")
-    t.join(timeout=10)
-    assert not t.is_alive() and not built
-
-
-def test_ensure_derived_pid_reuse_ceiling_steals(tmp_path):
-    """A lock older than the absolute ceiling is stolen even when its
-    recorded pid is alive: a crashed builder's pid recycled by an
-    unrelated long-lived process must not wedge waiters forever
-    (r6 ADVICE, sinks._lock_owner_dead pid-reuse hazard)."""
-    import os
-    import time
-
-    from base_etl_spark.sinks import _ensure_derived
-
-    target = str(tmp_path / "layout")
-    lock = target + ".lock"
-    with open(lock, "w") as f:
-        f.write(str(os.getpid()))  # "recycled" pid: alive, not a builder
-    ancient = time.time() - 5 * 3600  # past the 4 h ceiling
-    os.utime(lock, (ancient, ancient))
-
-    built = []
-
-    def build(p):
-        os.makedirs(p)
-        open(os.path.join(p, "part-0"), "w").close()
-        built.append(p)
-
-    _ensure_derived(target, "k1", build)
-    assert built and os.path.isdir(target)
+    queries()[key](spark, SF_TEST).collect()
+    sentinels = [os.path.join(scratch_path(SF_TEST, name), "_sentinel") for name in _LAYOUTS[key]]
+    for p in sentinels:
+        open(p, "w").close()
+    v = compare.check_key(spark, duck, key, SF_TEST)
+    assert not [p for p in sentinels if os.path.exists(p)], "layout not rewritten"
+    assert v.status == compare.PASS, v.problems
 
 
 def test_avro_registration_matches_jar_probe(spark):

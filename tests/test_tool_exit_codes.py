@@ -69,6 +69,29 @@ def test_exit_gate_forced_fail_stage(tmp_path, monkeypatch) -> None:
     assert rc == 0 and json.load(open(out))["pass"] is True
 
 
+def test_exit_gate_summary_names_failing_key(tmp_path, monkeypatch) -> None:
+    """A failing check stage's summary keeps its FAIL lines, even when
+    later stdout lines and stderr noise fill both tails."""
+    exit_gate = _exit_gate()
+    out = str(tmp_path / "gate.json")
+    fake_check = (
+        "import sys\n"
+        "print('PASS  agg_cube: 9 rows (0.1s)')\n"
+        "print('FAIL  agg_pricing: rowcount spark=3 oracle=6')\n"
+        "for i in range(6): print(f'PASS  key_{i}: 1 rows (0.1s)')\n"
+        "print()\n"
+        "print('7 pass, 0 rows-only, 1 fail / 8 keys')\n"
+        "for i in range(6): print(f'[Stage {i}:====>   (4 + 3) / 8]', file=sys.stderr)\n"
+        "sys.exit(1)\n"
+    )
+    monkeypatch.setattr(exit_gate, "STAGES", [("check", [sys.executable, "-c", fake_check])])
+    monkeypatch.setattr(sys, "argv", ["exit_gate.py", "--out", out])
+    assert exit_gate.main() == 1
+    summary = json.load(open(out))["stages"]["check"]["summary"]
+    assert any(ln.startswith("FAIL  agg_pricing:") for ln in summary), summary
+    assert "7 pass, 0 rows-only, 1 fail / 8 keys" in summary
+
+
 def test_invariance_stages_run_check_at_three_cpus() -> None:
     """The fan-out invariance stages are the oracle sweep at an awkward
     parallelism, not a separate diff tool."""

@@ -54,7 +54,8 @@ def main() -> int:
         print(f"unknown keys: {unknown}", file=sys.stderr)
         return 2
 
-    spark = build_session("check")
+    # no progress bars: they would bury the FAIL lines in a stage's log
+    spark = build_session("check", extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     con = oracle_con(sf)
 

@@ -74,6 +74,16 @@ def _tail(text: str, n: int = 4) -> list[str]:
     return lines[-n:]
 
 
+def _summary(proc: subprocess.CompletedProcess) -> list[str]:
+    """The stdout tail; for a failing stage also every ``FAIL `` line of
+    stdout (the keys a check stage failed) and the stderr tail."""
+    tail = _tail(proc.stdout)
+    if proc.returncode == 0:
+        return tail
+    fails = [ln for ln in proc.stdout.splitlines() if ln.startswith("FAIL ") and ln not in tail]
+    return fails + tail + _tail(proc.stderr)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--skip", nargs="*", default=[], metavar="STAGE")
@@ -117,7 +127,7 @@ def main() -> int:
             "status": "pass" if passed else "FAIL",
             "exit_code": proc.returncode,
             "sec": sec,
-            "summary": _tail(proc.stdout) + ([] if passed else _tail(proc.stderr)),
+            "summary": _summary(proc),
         }
         print(f"   {'pass' if passed else 'FAIL'} in {sec}s", file=sys.stderr, flush=True)
 
