@@ -64,13 +64,13 @@ def run_daily_job(
     a backfill date never double-inserts (delete+append ~= partition
     overwrite for databases). Returns the row count written, observed
     on the parquet write itself (no second pass over the join)."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out = daily_order_summary(spark, sf_dir, day).withColumn(
         "ds", F.date_format("o_orderdate", "yyyy-MM-dd")
     )
     obs = Observation()
     written = out.observe(obs, F.count(F.lit(1)).alias("rows"))
-    written.write.mode("overwrite").partitionBy("ds").parquet(out_path)
+    w = written.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    w.partitionBy("ds").parquet(out_path)
     if jdbc_url:
         # ANSI-quoted column (Spark's JDBC writer creates case-sensitive
         # lowercase identifiers) + VARCHAR cast (Derby maps StringType to

@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, LongType, TimestampType
+from pyspark.sql.types import DataType, LongType, StructType, TimestampType
 
 from base_etl_spark import schemas
 
@@ -44,21 +44,51 @@ def ensure_confs(spark: SparkSession) -> None:
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table, asserted + canonicalized.
-
-    events.ts has shipped in two fixture generations: INT64
-    TIMESTAMP(NANOS) — LongType nanoseconds under nanosAsLong, converted
-    here with integer `div` (not `/`: float division of ~1.7e18 ns loses
-    precision beyond 2^53) — and TIMESTAMP(MICROS), which Spark reads
-    natively as TimestampType and needs no conversion. Both layouts pass
-    the drift gate (schemas.ALT_RAW_SCHEMAS) and canonicalize to the same
-    TimestampType column.
-    """
+    """Read one fixture table, asserted + canonicalized (events.ts through
+    `canonical_events`)."""
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     schemas.assert_schema(name, df.schema)
-    if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    return canonical_events(df) if name == "events" else df
+
+
+def events_ts_ns(raw_schema: StructType) -> bool:
+    """Whether a raw events schema carries ts in the INT64 nanosecond
+    layout — the one place that decides it.
+
+    events.ts has shipped in two fixture generations: INT64
+    TIMESTAMP(NANOS), which reads as LongType nanoseconds under
+    nanosAsLong, and TIMESTAMP(MICROS), which Spark reads natively as
+    TimestampType. Both layouts pass the drift gate
+    (schemas.ALT_RAW_SCHEMAS); batch and stream readers alike ask this
+    function which one they hold."""
+    return isinstance(raw_schema["ts"].dataType, LongType)
+
+
+def canonical_events(raw: DataFrame) -> DataFrame:
+    """A raw events read (batch or stream) with ts as TimestampType. The
+    nanosecond layout converts with integer `div` (not `/`: float
+    division of ~1.7e18 ns loses precision beyond 2^53); the microsecond
+    layout is already canonical."""
+    if events_ts_ns(raw.schema):
+        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return raw
+
+
+def spread(df: DataFrame, col: str) -> DataFrame:
+    """Hash-repartition `df` by `col` into one partition per core, ahead
+    of a stage that is expensive per row (shingle/token explosion, vector
+    projection, a media codec).
+
+    The fixtures arrive as one small parquet file, i.e. ONE input
+    partition, and running the expansion on it serializes the operator
+    on a single task. The partition count is EXPLICIT because AQE
+    coalesces a bare repartition(col) of a few MB back down to one
+    post-shuffle partition (advisoryPartitionSizeInBytes is 64 MB),
+    silently re-serializing the downstream per-row work; Spark skips
+    that coalescing when the user names the count. At 100 TB the input
+    is already many-partitioned and this coalesces nothing; keying by
+    the id also co-locates each id's rows for a following per-id agg."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, col)
 
 
 @dataclass
@@ -172,12 +202,8 @@ def events_between(spark: SparkSession, sf_dir: str, start_us: int, end_us: int)
     and no conversion is needed at all.
     """
     raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    if isinstance(raw.schema["ts"].dataType, LongType):
-        pushed = raw.filter(
-            (F.col("ts") >= F.lit(start_us * 1000)) & (F.col("ts") < F.lit(end_us * 1000))
-        )
-        return pushed.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.filter(
-        (F.col("ts") >= F.timestamp_micros(F.lit(start_us)))
-        & (F.col("ts") < F.timestamp_micros(F.lit(end_us)))
-    )
+    if events_ts_ns(raw.schema):
+        lo, hi = F.lit(start_us * 1000), F.lit(end_us * 1000)
+    else:
+        lo, hi = F.timestamp_micros(F.lit(start_us)), F.timestamp_micros(F.lit(end_us))
+    return canonical_events(raw.filter((F.col("ts") >= lo) & (F.col("ts") < hi)))

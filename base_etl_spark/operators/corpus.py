@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from base_etl_spark.io import Tables
+from base_etl_spark.io import Tables, spread
 from base_etl_spark.registry import query
 from base_etl_spark.operators.llm_dedup import (
     _JACCARD_ORACLE,
@@ -215,11 +215,11 @@ def text_contamination(t: Tables) -> DataFrame:
     corpus (eval suites are MBs, corpora are TBs), so it BROADCASTS and
     the train side streams through one scan + one groupBy(doc_id) —
     which co-partitions with the shingle explode exactly like the dedup
-    operators (same _spread key). No shuffle ever carries the corpus
+    operators (same io.spread doc_id key). No shuffle ever carries the corpus
     text, only (doc_id, shingle-count) aggregates."""
-    from base_etl_spark.operators.llm_dedup import _shingles, _spread
+    from base_etl_spark.operators.llm_dedup import _shingles
 
-    sh = _spread(t.documents).select(
+    sh = spread(t.documents, "doc_id").select(
         "doc_id", "source", F.explode(F.array_distinct(_shingles())).alias("s")
     )
     bench = F.broadcast(

@@ -281,7 +281,7 @@ def graph_triangle_count(t: Tables) -> DataFrame:
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
             F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("ddeg"),
         )
-        .persist()  # read three times by the wedge + closing joins
+        .localCheckpoint(eager=False)  # read three times by the wedge + closing joins
     )
     e1 = eo.select(
         F.col("src"), F.col("dst").alias("v_dst"), F.col("ddeg").alias("v_deg")

@@ -27,34 +27,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from base_etl_spark import iterstats
-from base_etl_spark.io import Tables
+from base_etl_spark.io import Tables, spread
 from base_etl_spark.registry import query
 
 THETA = 0.6  # Jaccard threshold shared by the exact and MinHash tiers
 
 
-def _spread(docs: DataFrame) -> DataFrame:
-    """Re-spread the corpus across the cluster before a heavy expansion.
-
-    The fixture corpus arrives as one small parquet file = ONE input
-    partition; exploding shingles/tokens and running 32-64 aggregate
-    expressions on a single task serializes the whole operator (measured:
-    the minhash signature stage ran 1-task). A shuffle of the tiny
-    pre-explosion rows is orders of magnitude cheaper than single-threading
-    the expansion. At 100 TB inputs are already many-partitioned and this
-    repartition coalesces nothing — it keys by doc_id, which also
-    co-locates each doc's shingles for the signature agg.
-
-    The partition count is EXPLICIT: AQE coalesces a bare
-    repartition(col) of a few MB back down to ONE post-shuffle partition
-    (advisoryPartitionSizeInBytes is 64 MB), silently re-serializing the
-    downstream per-row compute — measured: the minhash pipeline ran its
-    signature and verify projections 1-task. Spark skips AQE coalescing
-    when the user names a partition count, which is exactly the contract
-    here: spread the EXPENSIVE-PER-ROW stage across every core even
-    though the bytes are tiny."""
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.repartition(n, F.col("doc_id"))
 _N_HASHES = 32  # MinHash signature length
 _N_BANDS = 8  # 8 bands x 4 rows; P(candidate) = 1-(1-j^4)^8: 0.67 at j=.6, 0.97 at j~.77
 _SHINGLE = 3  # words per shingle
@@ -111,7 +89,7 @@ _JACCARD_ORACLE = f"""
 
 def _shingle_sets(docs: DataFrame) -> DataFrame:
     """Distinct (doc_id, shingle) pairs, re-spread for parallelism."""
-    return _spread(docs).select(
+    return spread(docs, "doc_id").select(
         "doc_id", F.explode(F.array_distinct(_shingles())).alias("s")
     )
 
@@ -189,7 +167,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
 
     Shape: explode distinct shingles -> one flat 32-aggregate min per
     doc_id. The explode LOOKS like it should shuffle every (doc, shingle)
-    pair, but it doesn't: _spread already hash-partitioned by doc_id with
+    pair, but it doesn't: io.spread already hash-partitioned by doc_id with
     the same partition count, so Catalyst elides the groupBy exchange and
     the explode pipelines map-side into the partial aggregate — the only
     rows that ever cross the wire are the pre-explosion docs. Measured 2x
@@ -199,7 +177,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     whole-stage codegen. Docs with fewer than _SHINGLE tokens have no
     shingles and are dropped (explode of an empty array), matching the
     prior formulation."""
-    sh = _spread(docs).select(
+    sh = spread(docs, "doc_id").select(
         "doc_id", F.explode(F.array_distinct(_shingles())).alias("s")
     ).select("doc_id", F.xxhash64("s").alias("h"))
     return sh.groupBy("doc_id").agg(
@@ -368,7 +346,7 @@ def _verify_candidates(docs: DataFrame, cands: DataFrame) -> DataFrame:
     100x-amplified corpus the planner's broadcast choice died with 'Not
     enough memory to build and broadcast the table'
     (tools/scale_stress.py --amp 100, 2026-08-14)."""
-    shs = _spread(docs).select("doc_id", F.array_distinct(_shingles()).alias("sh"))
+    shs = spread(docs, "doc_id").select("doc_id", F.array_distinct(_shingles()).alias("sh"))
     sides = cands.select(
         "doc_a",
         "doc_b",
@@ -578,7 +556,7 @@ def dedup_simhash(t: Tables) -> DataFrame:
 def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash int64): per token a 64-bit hash votes +1/-1 on
     each bit position; the sign of each bit-sum becomes the bit."""
-    tok = _spread(docs).select("doc_id", F.explode(F.split("text", " ")).alias("w"))
+    tok = spread(docs, "doc_id").select("doc_id", F.explode(F.split("text", " ")).alias("w"))
     h = F.xxhash64("w")
     votes = [
         F.sum(

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from base_etl_spark.io import Tables, local_frame
+from base_etl_spark.io import Tables, local_frame, spread
 from base_etl_spark.registry import query
 
 # tiny English stopword list used by langid / quality scoring; keep in
@@ -400,11 +400,10 @@ def text_unigram_nll(t: Tables) -> DataFrame:
     law — ~millions of types vs trillions of tokens at 100 TB) and
     BROADCASTS back onto the token stream, so the only corpus-sized
     shuffle is the final doc_id agg, which co-partitions with the explode
-    (_spread key). The 1-row total-token count rides the same broadcast
+    (io.spread doc_id key). The 1-row total-token count rides the same broadcast
     pattern as text_tfidf's corpus-size scalar."""
-    from base_etl_spark.operators.llm_dedup import _spread
 
-    tok = _spread(t.documents).select(
+    tok = spread(t.documents, "doc_id").select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     )
     freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
@@ -473,12 +472,12 @@ def text_repetition(t: Tables) -> DataFrame:
     100 TB shape: the n-gram arrays and the distinct/total sizes are
     per-row projections (linear, codegen); the only shuffles are the
     exploded-bigram count keyed on (doc_id, bigram) and its doc_id
-    re-agg — co-partitioned with _spread's doc_id keying. Nothing is
+    re-agg — co-partitioned with io.spread's doc_id keying. Nothing is
     quadratic in document length (array_distinct is hash-based;
     no per-element HOF counting)."""
-    from base_etl_spark.operators.llm_dedup import _shingles, _spread
+    from base_etl_spark.operators.llm_dedup import _shingles
 
-    base = _spread(t.documents).select(
+    base = spread(t.documents, "doc_id").select(
         "doc_id",
         F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
         _shingles("text", 2).alias("g2"),
@@ -1150,10 +1149,9 @@ def text_bigram_nll(t: Tables) -> DataFrame:
     = Σ_w2 C(w1 w2), no second corpus pass), and V is a 1-row
     broadcast. Docs with < 2 tokens drop out on both sides (no
     bigrams)."""
-    from base_etl_spark.operators.llm_dedup import _spread
 
     toks = F.split("text", " ")
-    bg = _spread(t.documents).select(
+    bg = spread(t.documents, "doc_id").select(
         "doc_id",
         F.explode(
             F.expr(

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from base_etl_spark import iterstats
-from base_etl_spark.io import Tables, local_frame
+from base_etl_spark.io import Tables, local_frame, spread
 from base_etl_spark.registry import query
 from base_etl_spark.schemas import EMBEDDING_DIM
 
@@ -171,14 +171,11 @@ def multimodal_join(t: Tables) -> DataFrame:
 
 
 def _normalized(emb: DataFrame) -> DataFrame:
-    """(vec_id, nemb): L2-normalized double vectors, re-spread across the
-    cluster first (the fixture arrives as ONE parquet file = one input
-    partition; the 48-hyperplane projection below would otherwise run on
-    a single task — same lesson as llm_dedup._spread). The partition
-    count is explicit because AQE coalesces a bare repartition(col) of
-    small data back to one partition, re-serializing the projection."""
+    """(vec_id, nemb): L2-normalized double vectors, spread across the
+    cores first (`io.spread`) so the 48-hyperplane projection below does
+    not run on the fixture's single input partition."""
     return (
-        emb.repartition(emb.sparkSession.sparkContext.defaultParallelism, F.col("vec_id"))
+        spread(emb, "vec_id")
         .select("vec_id", "embedding", norm(F.col("embedding")).alias("nn"))
         .select(
             "vec_id",
@@ -293,22 +290,23 @@ def dedup_embedding_pairs(
     classes = emb.select(
         "vec_id",
         F.min("vec_id").over(Window.partitionBy("embedding")).alias("rep_id"),
-    ).persist()
+    ).localCheckpoint(eager=False)
     reps = emb.join(
         classes.filter(F.col("vec_id") == F.col("rep_id")).select("vec_id"),
         "vec_id",
     )
     n = _normalized(reps)
     banded = srp_banded(n.select("vec_id", "nemb"), n_bands, rows_per_band)
-    # Self-join over a PERSISTED banded table — deliberately NOT the
+    # Self-join over a CHECKPOINTED banded table — deliberately NOT the
     # bucket-collect pair expansion minhash uses (llm_dedup.bucket_pairs):
     # low-theta SRP banding has FEW, HUGE buckets (2-bit keys => 4
     # buckets/band), so in-row expansion packs ~10^5-10^6 pairs into
     # single rows and one task straggles (measured 8 s vs 3 s). The join
-    # distributes a bucket's pair work across tasks; the persist keeps
-    # the SRP lineage from evaluating once per join side. At production
+    # distributes a bucket's pair work across tasks; the lazy local
+    # checkpoint keeps the SRP lineage from evaluating once per join side
+    # without registering anything that outlives the call. At production
     # theta (~0.95, 6-8-bit keys) buckets fragment and either shape works.
-    banded = banded.persist()
+    banded = banded.localCheckpoint(eager=False)
     a, b = banded.alias("a"), banded.alias("b")
     cands = (
         a.join(

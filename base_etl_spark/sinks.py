@@ -37,14 +37,12 @@ def write_parquet(
 ) -> None:
     """Partitioned parquet sink. partition_by columns should be
     low-cardinality (date, region); high-cardinality partitioning
-    produces the small-files problem at scale. An overwrite replaces
-    everything under ``path``: partition overwrite is pinned to static,
-    whatever the session's ``spark.sql.sources.partitionOverwriteMode``."""
+    produces the small-files problem at scale."""
     if target_partitions:
         df = df.repartition(target_partitions, *(partition_by or []))
     w = df.write.mode(mode)
     if partition_by:
-        w = w.option("partitionOverwriteMode", "static").partitionBy(*partition_by)
+        w = w.partitionBy(*partition_by)
     w.parquet(path)
 
 
@@ -751,60 +749,6 @@ def scan_orc_agg(t: Tables) -> DataFrame:
             F.round(F.avg("o_totalprice"), 4).alias("avg_price"),
         )
     )
-
-
-def _avro_available() -> bool:
-    """True when the spark-avro module jar is on this distribution's
-    classpath. Avro is an EXTERNAL module (`spark-avro_2.13`, published
-    with every Spark release but not bundled in the pyspark wheel), so
-    the probe is a session-free jars-dir glob — registration happens at
-    import time, before any SparkSession exists. This sandbox is offline
-    and the wheel ships no avro jar (probe recorded in SURVEY §2.1), so
-    the key self-registers the day the jar lands in $SPARK_HOME/jars —
-    no code change needed then."""
-    import glob as _glob
-
-    try:
-        import pyspark
-
-        jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
-        return bool(_glob.glob(os.path.join(jars, "*spark-avro*.jar")))
-    except Exception:
-        return False
-
-
-if _avro_available():  # pragma: no cover — jar absent in this sandbox
-
-    @query(
-        "scan_avro_agg",
-        oracle="""
-        SELECT o_orderpriority,
-               count(*) AS n_orders,
-               round(avg(o_totalprice), 4) AS avg_price
-        FROM orders
-        GROUP BY o_orderpriority
-        """,
-    )
-    def scan_avro_agg(t: Tables) -> DataFrame:
-        """Avro source/sink, driver-checked end to end (same
-        derived-fixture protocol as the CSV/JSON/ORC keys): orders →
-        Avro → read → aggregate, oracled against the ORIGINAL parquet.
-        Avro is the row-oriented lake interchange format (Kafka/schema-
-        registry ecosystems): no column pruning or predicate pushdown —
-        every row deserializes — so it belongs at the ingest edge with a
-        parquet conversion behind it; this key certifies type fidelity
-        through the format boundary including timestamps."""
-        path = scratch_path(t.sf_dir, "orders_avro")
-        t.orders.write.mode("overwrite").format("avro").save(path)
-        return (
-            t.spark.read.format("avro")
-            .load(path)
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.round(F.avg("o_totalprice"), 4).alias("avg_price"),
-            )
-        )
 
 
 @query(

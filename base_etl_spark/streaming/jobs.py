@@ -30,7 +30,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from base_etl_spark.io import ensure_confs
+from base_etl_spark.io import canonical_events, ensure_confs, events_ts_ns
 from base_etl_spark.schemas import EVENTS_RAW, EVENTS_RAW_US
 
 
@@ -45,16 +45,23 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_confs(spark)
     import os
 
-    footer = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    ns_layout = isinstance(footer["ts"].dataType, LongType)
-    raw = (
-        spark.readStream.schema(EVENTS_RAW if ns_layout else EVENTS_RAW_US)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+    return _events_source(
+        spark, os.path.join(sf_dir, "events.parquet"), sf_dir,
+        pathGlobFilter="events.parquet",
     )
-    if ns_layout:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw
+
+
+def _events_source(spark: SparkSession, footer_path: str, src_dir: str, **options) -> DataFrame:
+    """readStream over `src_dir` declaring the raw schema whose ts layout
+    `footer_path`'s parquet footer carries, canonicalized like the batch
+    loader."""
+    footer = spark.read.parquet(footer_path).schema
+    raw = (
+        spark.readStream.schema(EVENTS_RAW if events_ts_ns(footer) else EVENTS_RAW_US)
+        .options(**options)
+        .parquet(src_dir)
+    )
+    return canonical_events(raw)
 
 
 def streaming_tumbling(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -240,15 +247,7 @@ def run_foreach_batch_rollup(
 
     if not os.path.exists(checkpoint_dir) and os.path.exists(out_dir):
         shutil.rmtree(out_dir)
-    footer = spark.read.parquet(src_dir).schema
-    ns_layout = isinstance(footer["ts"].dataType, LongType)
-    raw = (
-        spark.readStream.schema(EVENTS_RAW if ns_layout else EVENTS_RAW_US)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    if ns_layout:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    raw = _events_source(spark, src_dir, src_dir, maxFilesPerTrigger="1")
     agg = (
         raw.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
@@ -415,15 +414,7 @@ def run_foreach_batch_ledger_append(
     ledger guarantees each epoch's facts land exactly once, so the sum
     equals the batch census iff no batch duplicated or vanished.
     Returns the published per-epoch fact table."""
-    footer = spark.read.parquet(src_dir).schema
-    ns_layout = isinstance(footer["ts"].dataType, LongType)
-    raw = (
-        spark.readStream.schema(EVENTS_RAW if ns_layout else EVENTS_RAW_US)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    if ns_layout:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    raw = _events_source(spark, src_dir, src_dir, maxFilesPerTrigger="1")
     publish = make_ledger_append_sink(out_dir)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:

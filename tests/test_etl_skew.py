@@ -35,6 +35,19 @@ def test_daily_job_idempotent_overwrite(spark, tmp_path):
     assert n1 == n2 == spark.read.parquet(out).count()
 
 
+def test_daily_job_leaves_session_conf_alone(spark, tmp_path):
+    """Dynamic partition overwrite is the backfill write's own option: the
+    session's confs read the same after a run, and a second date still
+    keeps the first date's partition."""
+    out = str(tmp_path / "daily3")
+    before = dict(spark.sql("SET").collect())
+    etl.run_daily_job(spark, SF_TEST, dt.date(1995, 6, 19), out)
+    etl.run_daily_job(spark, SF_TEST, dt.date(1995, 6, 20), out)
+    assert dict(spark.sql("SET").collect()) == before
+    days = {str(r.ds) for r in spark.read.parquet(out).select("ds").distinct().collect()}
+    assert days == {"1995-06-19", "1995-06-20"}
+
+
 def test_upsert_parquet_merges(spark, tmp_path):
     path = str(tmp_path / "base")
     spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]).write.parquet(path)

@@ -153,9 +153,32 @@ def test_sample_stratified_prunes_text_column(spark):
 
 
 @pytest.fixture(scope="module")
-def all_plans(spark) -> dict[str, str]:
-    """Every key's formatted plan, built once for the registry-wide audits."""
-    return {k: _plan(fn(spark, SF_TEST)) for k, fn in _QS.items()}
+def registry_build(spark) -> tuple[dict[str, str], list[str]]:
+    """Every key's formatted plan, built once for the registry-wide audits,
+    and the keys whose build left a relation in Spark's cache manager
+    (cleared before the build and after each such key)."""
+    cache = spark._jsparkSession.sharedState().cacheManager()  # noqa: SLF001
+    spark.catalog.clearCache()
+    plans, cached = {}, []
+    for k, fn in _QS.items():
+        plans[k] = _plan(fn(spark, SF_TEST))
+        if not cache.isEmpty():
+            cached.append(k)
+            spark.catalog.clearCache()
+    return plans, cached
+
+
+@pytest.fixture(scope="module")
+def all_plans(registry_build) -> dict[str, str]:
+    return registry_build[0]
+
+
+def test_no_key_caches_a_frame_beyond_its_call(registry_build):
+    """Building a key's DataFrame must register nothing with the cache
+    manager: a `.persist()` it never releases would be served to the next
+    call. A frame read more than once within a call takes a lazy local
+    checkpoint instead."""
+    assert registry_build[1] == []
 
 
 def test_no_accidental_cartesian_in_any_key(all_plans):

@@ -465,3 +465,51 @@ def test_sink_ledger_census_matches_direct_aggregate(spark):
     }
     assert got == want
     assert "poison" not in got
+
+
+@pytest.fixture(scope="module")
+def ns_fixture(tmp_path_factory):
+    """sf0.001 with events.ts rewritten as INT64 TIMESTAMP(NANOS), the
+    layout FIXTURES.md records for the original fixture; the other nine
+    tables are copied unchanged."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = tmp_path_factory.mktemp("sf_ns")
+    for name in os.listdir(SF_TEST):
+        if name != "events.parquet":
+            shutil.copy(os.path.join(SF_TEST, name), out / name)
+    ev = pq.read_table(os.path.join(SF_TEST, "events.parquet"))
+    ev = ev.set_column(ev.schema.get_field_index("ts"), "ts", ev["ts"].cast(pa.timestamp("ns")))
+    pq.write_table(ev, out / "events.parquet")
+    assert pq.read_schema(out / "events.parquet").field("ts").type == pa.timestamp("ns")
+    return str(out)
+
+
+def test_ns_events_layout_reads_like_us(spark, ns_fixture):
+    """The nanosecond events.ts layout gives the microsecond layout's rows
+    through the batch loader, the pushed-down range scan and the stream
+    source, and events keys pass the oracle on it."""
+    from base_etl_spark.compare import PASS, check_key, oracle_con
+    from base_etl_spark.io import events_between, events_ts_ns
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert events_ts_ns(spark.read.parquet(f"{ns_fixture}/events.parquet").schema)
+    assert rows(load_tables(spark, ns_fixture).events) == rows(load_tables(spark, SF_TEST).events)
+    lo, hi = 1704412800000000, 1705017600000000  # [2024-01-05, 2024-01-12)
+    week = rows(events_between(spark, ns_fixture, lo, hi))
+    assert week and week == rows(events_between(spark, SF_TEST, lo, hi))
+    streamed = {
+        d: rows(st.run_to_memory(st.read_events_stream(spark, d), f"ev_{i}"))
+        for i, d in enumerate((ns_fixture, SF_TEST))
+    }
+    assert streamed[ns_fixture] == streamed[SF_TEST]
+    con = oracle_con(ns_fixture)
+    for key in ("stream_tumbling", "events_gapfill", "agg_pricing", "sink_ledger_census"):
+        v = check_key(spark, con, key, ns_fixture)
+        assert v.status == PASS, (key, v.problems)

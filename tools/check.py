@@ -8,10 +8,12 @@ ns-datetimes, DuckDB through .df() so HUGEINT/DECIMAL->float64 coercions
 are visible). A green here means the driver's value-hash matches.
 
 Each key is judged by ``base_etl_spark.compare.check_key``; rows-only
-keys run to check they do not crash. ``--sf`` takes a fixture directory
-or the name of a generated tier from ``tools/tiers.py`` (empty,
-empty_facts, one_row, fuzz, fuzz_nulls), which is built first. Exit code
-0 when no key fails, 1 when one does, 2 on a bad argument.
+keys run to check they do not crash, and their line carries the first 12
+hex characters of ``perfbench.checks.rows_digest``, so two sweeps can be
+diffed. ``--sf`` takes a fixture directory or the name of a generated
+tier from ``tools/tiers.py`` (empty, empty_facts, one_row, fuzz,
+fuzz_nulls), which is built first. Exit code 0 when no key fails, 1 when
+one does, 2 on a bad argument.
 
 Usage: python tools/check.py [key ...] [--sf DIR|TIER] [-v]
 """
@@ -29,6 +31,7 @@ from base_etl_spark import build_session, queries  # noqa: E402
 from base_etl_spark.compare import (  # noqa: E402
     FAIL, PASS, ROWS_ONLY, check_key, oracle_con,
 )
+from perfbench.checks import rows_digest  # noqa: E402
 from tools.tiers import TIERS  # noqa: E402
 
 
@@ -67,7 +70,8 @@ def main() -> int:
         if v.status == PASS:
             print(f"PASS  {k}: {len(v.rows)} rows ({time.time()-t0:.1f}s)")
         elif v.status == ROWS_ONLY:
-            print(f"rows  {k}: {len(v.rows)} rows (rows-only, {time.time()-t0:.1f}s)")
+            print(f"rows  {k}: {len(v.rows)} rows (rows-only, {time.time()-t0:.1f}s)"
+                  f" digest {rows_digest(v.rows)[:12]}")
         else:
             print(f"FAIL  {k}: " + " | ".join(v.problems))
             if args.verbose:
