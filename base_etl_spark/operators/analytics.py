@@ -273,7 +273,7 @@ def sketch_hll_rollup(t: Tables) -> DataFrame:
     constant), then every coarser rollup is an algebraic merge of
     sketches, exactly like rollup_incremental's sum-merge but for a
     non-additive measure. Rows-only key (sketch binaries differ across
-    engines); the self-check (tests/test_selfchecks.py) holds every
+    engines); the selfcheck battery (`_chk_hll_rollup`) holds every
     estimate within 5% of the exact distinct count.
     """
     daily = t.events.groupBy(F.to_date("ts").alias("day")).agg(
@@ -934,9 +934,9 @@ def sketch_cms_freq(t: Tables) -> DataFrame:
     construction: one sketch row (~100 KB at eps=1e-3) plus one
     estimate call per DISTINCT event type — the event-type dimension is
     k-bounded like the k-means centroid collect. Rows-only by design
-    (sketch cell layout is engine-specific); the self-check
-    (tests/test_selfchecks.py) asserts the CMS one-sided error law:
-    exact <= estimate <= exact + eps*N for every type.
+    (sketch cell layout is engine-specific); the selfcheck battery's
+    `_chk_cms` asserts the CMS one-sided error law, exact <= estimate
+    <= exact + eps*N, with one row per event type.
 
     Determinism: fixed seed, and CMS updates are commutative integer
     cell increments, so estimates are partition- and merge-order-

@@ -389,9 +389,11 @@ def dedup_near_minhash(t: Tables) -> DataFrame:
     (equality also asserted against dedup_near_jaccard in tests).
 
     Recall margin, MEASURED on the fixtures (2026-08-13): every true
-    pair has Jaccard >= 0.9 at sf0.01 / >= 0.8 at sf0.1 — far above the
-    0.6 threshold — so the per-pair miss probability at 8x4 banding is
-    <= 2e-4 / 1.5e-2 and P(all pairs recalled) is 0.9998 / 0.98. The
+    pair has Jaccard >= 0.9 at sf0.01 / >= 0.8 at sf0.1, above the 0.6
+    threshold. 8x4 banding recalls a pair of Jaccard j with probability
+    1-(1-j^4)^8: 0.67 at j = 0.6, 0.985 at 0.8, 0.9998 at 0.9. That is
+    a per-pair figure, so a corpus of many pairs loses some: sf0.01
+    amplified x10 misses 11 of its 25,000 exact pairs. The
     oracle contract is therefore corpus-dependent by design: a
     REGENERATED corpus would re-roll those dice. The safety net is the
     local strict gate (tools/check.py runs this key against the exact

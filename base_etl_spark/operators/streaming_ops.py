@@ -144,9 +144,10 @@ def stream_late_data(t: Tables) -> DataFrame:
 
     Rows-only BY DESIGN — the only R row with no exact SQL twin, because
     a watermark is a runtime concept (which rows are 'late' depends on
-    arrival order, not data). It is NOT untested: tests/test_selfchecks.py
-    ::test_late_data_subset_of_all_windows pins the horizon property
-    (every surviving window lies within watermark+window of max ts), and
+    arrival order, not data). It is NOT untested: the selfcheck battery's
+    `_chk_late_data` pins the horizon property (every surviving window
+    lies within watermark+window of max ts, and the report is non-empty
+    whenever an event has a timestamp), and
     tests/test_streaming.py runs the real withWatermark micro-batch
     queries (EventTimeWatermark plan node asserted; tumbling/dedup/
     stateful outputs equal their batch twins) — the strongest cross-checks

@@ -13,6 +13,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_mem() -> str:
+    """min(8g, a third of physical memory) in whole GB: the heap grows
+    toward its cap, and two sessions side by side (a test run beside a
+    check sweep) must leave the host room."""
+    host = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(8, host // (3 * 2**30)))}g"
+
+
 def build_session(
     app_name: str = "base_etl_spark",
     master: str | None = None,
@@ -73,7 +81,7 @@ def build_session(
         # minPartitionNum only matters when files < cores.)
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_mem())
     )
     if extra_conf:
         for k, v in extra_conf.items():

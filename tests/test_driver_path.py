@@ -1,7 +1,7 @@
 """The driver path stays in the JVM: frames built from driver rows plan as
 a LocalTableScan (`io.local_frame`), plan building sends few py4j
-commands, and `load_tables` re-registers temp views only on a switch of
-directory."""
+commands, `load_tables` re-registers temp views only on a switch of
+directory, and the driver heap leaves the host room for a second session."""
 
 from __future__ import annotations
 
@@ -135,6 +135,12 @@ def test_bpe_train_build_py4j_budget(spark, monkeypatch):
 # Measured at sf0.001: 454. With per-Column origin capture on, 834; with
 # the round's fold built from Column lambdas, 1,256; with both, 3,026.
 _BPE_BUILD_CALL_BUDGET = 650
+
+
+def test_driver_heap_at_most_a_third_of_host_memory(spark):
+    mem = spark.sparkContext.getConf().get("spark.driver.memory")
+    host = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    assert mem.endswith("g") and int(mem[:-1]) * 2**30 <= host / 3, mem
 
 
 def test_load_tables_views_follow_the_last_dir(spark):

@@ -109,20 +109,6 @@ def test_dynamic_partition_pruning_on_partitioned_copy(spark, tables, tmp_path):
     assert "dynamicpruning" in jplan.lower(), jplan[:2000]
 
 
-def test_approx_quantile_selfcheck(spark):
-    from base_etl_spark import queries
-
-    qs = queries()
-    exact = {r.o_orderstatus: (r.p50, r.p90) for r in qs["agg_percentiles"](spark, SF_TEST).collect()}
-    approx = {
-        r.o_orderstatus: (r.p50_approx, r.p90_approx)
-        for r in qs["agg_approx_quantile"](spark, SF_TEST).collect()
-    }
-    for k, (p50, p90) in exact.items():
-        a50, a90 = approx[k]
-        assert abs(a50 - p50) / p50 < 0.02 and abs(a90 - p90) / p90 < 0.02
-
-
 def test_backfill_run_range_idempotent(spark, tmp_path):
     """3-day backfill, re-run: parquet partitions are overwritten in
     place (identical contents), the run log keeps append-only history,

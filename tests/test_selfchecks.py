@@ -1,13 +1,22 @@
-"""Self-checks for rows-only (R) keys (SURVEY §5.6): approximate vs
-exact, pandas kernels vs built-in expressions, LSH recall vs the exact
-tier."""
+"""Self-checks that the selfcheck battery cannot state on every tier.
+
+Each rows-only (R) key's invariant lives once, as a `_chk_*` predicate
+in `operators/selfcheck.py`, which every tier runs through
+`selfcheck_battery`. This file keeps planted inputs, reference
+replicas, fixture pins, twins of pandas kernels and built-in
+expressions, and one planted fault per predicate that replaced a test
+here, so that a predicate weakened to always-true fails."""
 
 from __future__ import annotations
+
+from datetime import datetime
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
 
 from base_etl_spark import queries
+from base_etl_spark.schemas import TABLE_NAMES
 from tests.conftest import SF_TEST
 
 _QS = queries()
@@ -18,10 +27,9 @@ def _rows(spark, key):
 
 
 def test_battery_covers_every_rows_only_key():
-    """selfcheck_battery (r9 VERDICT task 2) must carry exactly one
-    check per rows-only key: a NEW R key without a battery entry would
-    silently fall back to `no_oracle` driver rows — the gap the battery
-    exists to close. (The battery itself is a D key and excluded.)"""
+    """selfcheck_battery must carry exactly one check per rows-only
+    key: a new R key without a battery entry would have no driver-visible
+    check at all. (The battery itself has an oracle and is excluded.)"""
     from base_etl_spark.operators.selfcheck import _CHECK_FNS, _CHECKS
     from base_etl_spark.registry import REGISTRY
 
@@ -35,23 +43,112 @@ def test_battery_covers_every_rows_only_key():
     assert set(_CHECK_FNS) == battery_keys
 
 
-def test_approx_distinct_within_5pct(spark):
-    exact = {
-        r.event_type: r.n_users for r in _QS["agg_count_distinct"](spark, SF_TEST).collect()
-    }
-    approx = {
-        r.event_type: r.n_users_approx
-        for r in _QS["agg_approx_distinct"](spark, SF_TEST).collect()
-    }
-    for et, n in exact.items():
-        assert abs(approx[et] - n) <= max(1, 0.05 * n), (et, n, approx[et])
+_EV = "event_type string, user_id long"
+_DAY1, _DAY2 = datetime(2024, 1, 1, 12), datetime(2024, 1, 2, 12)
+_TOPK = "probe_id long, neighbor_id long, rn int"
+_PQ = "sub_id int, code int, mse double, n_vecs long"
+# check key -> {table or registry key: (ddl, rows)}: hand-built inputs
+# and parent outputs that break only the invariant named beside each
+_PLANTED = {
+    "agg_approx_distinct": {  # a 1-user group estimated at 3
+        "events": (_EV, [("c", 1), ("c", 2), ("v", 1)]),
+        "agg_approx_distinct": ("event_type string, n_users_approx long", [("c", 2), ("v", 3)])},
+    "agg_approx_quantile": {  # a p90 0.2 off an exact 2.8
+        "orders": ("o_orderstatus string, o_totalprice double", [("F", 1.0), ("F", 2.0), ("F", 3.0)]),
+        "agg_approx_quantile": ("o_orderstatus string, p50_approx double, p90_approx double",
+                                [("F", 2.0, 3.0)])},
+    "agg_approx_top_k": {  # ten keys of count 3 that leave out the count-5 key
+        "lineitem": ("l_partkey long", [(1,)] * 5 + [(k,) for k in range(2, 12)] * 3),
+        "agg_approx_top_k": ("l_partkey long, n_lines long", [(k, 3) for k in range(2, 12)])},
+    "agg_decile_lift_approx": {  # a responder lost
+        "agg_decile_lift_approx": ("decile int, n_cust long, n_resp long", [(1, 10, 1)]),
+        "agg_decile_lift": ("decile int, n_cust long, n_resp long", [(1, 10, 2)])},
+    "agg_freq_items": {  # the heavy hitter missing
+        "orders": ("o_orderpriority string", [("1-URGENT",), ("1-URGENT",), ("2-HIGH",)]),
+        "agg_freq_items": ("frequent_item string", [("2-HIGH",)])},
+    "agg_hll_native": {  # the ALL row 3 users off
+        "events": (_EV, [("c", 1), ("c", 2), ("v", 1)]),
+        "agg_hll_native": ("event_type string, n_users_est long", [("c", 2), ("v", 1), ("ALL", 5)])},
+    "cluster_kmeans": {  # a Lloyd fixed point whose cluster id is k
+        "embeddings": ("vec_id long, embedding array<float>", [(0, [0.0, 0.0]), (1, [9.0, 9.0])]),
+        "cluster_kmeans": ("vec_id long, cluster_id int, dist double", [(0, 8, 0.0), (1, 1, 0.0)])},
+    "dedup_minhash_estimate": {  # an estimate far outside the binomial bound
+        "dedup_minhash_estimate": ("jaccard_est double, jaccard_exact double", [(0.9, 0.1)])},
+    "dedup_simhash": {  # a pair 4 bits apart
+        "dedup_simhash": ("doc_a long, doc_b long, hamming int", [(1, 2, 4)])},
+    "etl_file_stats": {  # file ordinals {0, 2}, not 1..2
+        "orders": ("o_orderkey long", [(1,), (2,), (3,)]),
+        "etl_file_stats": ("file_ord int, file_bytes long, n_rows long, min_key long, max_key long",
+                           [(0, 9, 1, 1, 1), (2, 9, 2, 2, 3)])},
+    "graph_pagerank": {  # half the rank mass
+        "orders": ("o_custkey long", [(1,)]), "lineitem": ("l_suppkey long", [(1,)]),
+        "graph_pagerank": ("node long, rank double", [(1, 0.25), (2, 0.25)])},
+    "sample_poisson_bootstrap": {  # a point mean above the CI
+        "documents": ("doc_id long", [(1,), (2,)]),
+        "sample_poisson_bootstrap": ("n_docs long, n_replicates int, se_boot double, ci_lo double, "
+                                     "ci_hi double, point_mean double", [(2, 32, 0.1, 1.0, 2.0, 2.5)])},
+    "scan_binary_files": {  # orders twice, region missing
+        "scan_binary_files": ("file_name string, n_bytes long",
+                              [(f"{n}.parquet", 1) for n in TABLE_NAMES[1:] + ("orders",)])},
+    "sim_ivf_nprobe_sweep": {  # recall falls as nprobe grows
+        "embeddings": ("label int", [(i,) for i in range(5)]), "sim_topk": (_TOPK, [(0, 1, 1)]),
+        "sim_ivf_nprobe_sweep": ("nprobe int, n_hits long, n_possible long, recall double",
+                                 [(1, 5, 10, 0.5), (2, 3, 10, 0.3)])},
+    "sim_mmr_rerank": {  # probe 1 has no rerank group
+        "sim_topk": (_TOPK, [(0, 10, 1), (1, 11, 1)]),
+        "sim_mmr_rerank": ("probe_id long, neighbor_id long, rank int", [(0, 10 + i, i + 1) for i in range(5)])},
+    "sim_pq_quantize": {  # training raised the distortion
+        "embeddings": ("vec_id long", [(0,)]),
+        "sim_pq_quantize": (_PQ, [(s, 0, 2.0, 1) for s in range(8)]),
+        "sim_pq_distortion": (_PQ, [(s, 0, 1.0, 1) for s in range(8)])},
+    "sim_topk_ivf": {  # recall 0.2 against brute force
+        "sim_topk": (_TOPK, [(0, i, i + 1) for i in range(10)]),
+        "sim_topk_ivf": ("probe_id long, neighbor_id long", [(0, 0), (0, 1)])},
+    "sketch_cms_freq": {  # type b has no row
+        "events": ("event_type string", [("a",), ("a",), ("b",)]),
+        "sketch_cms_freq": ("event_type string, n_exact long, n_est long, n_over long", [("a", 2, 2, 0)])},
+    "sketch_hll_overlap": {  # the one retention day missing from the report
+        "events": ("ts timestamp, user_id long", [(_DAY1, 1), (_DAY2, 1)]),
+        "sketch_hll_overlap": ("day string, est_retained long", [])},
+    "sketch_hll_rollup": {  # no total row
+        "events": ("ts timestamp, user_id long", [(_DAY1, 1)]),
+        "sketch_hll_rollup": ("grain string, day string, est_users long", [("day", "2024-01-01", 1)])},
+    "sketch_kmv_distinct": {  # the estimate tier claimed below k users
+        "events": (_EV, [("c", 1), ("c", 2)]),
+        "sketch_kmv_distinct": ("event_type string, n_kept long, est_distinct double",
+                                [("c", 256, 2.4), ("ALL", 2, 2.0)])},
+    "stream_late_data": {  # no window though events exist
+        "events": ("ts timestamp", [(_DAY1,)]), "stream_late_data": ("window_start timestamp", [])},
+    "text_compress_ratio": {  # more than zlib's 11-byte overhead on a 30-char doc
+        "documents": ("doc_id long", [(1,)]),
+        "text_compress_ratio": ("doc_id long, raw_len int, compress_ratio double", [(1, 30, 1.45)])},
+    "udtf_python": {  # a 3-token chunk reported as 2
+        "documents": ("doc_id long, text string", [(1, "a b c")]),
+        "udtf_python": ("doc_id long, chunk_idx int, start_tok int, n_toks int, chunk_chars int",
+                        [(1, 0, 0, 2, 5)])},
+}
+
+
+@pytest.mark.parametrize("key", sorted(_PLANTED))
+def test_battery_check_fails_planted_fault(spark, monkeypatch, key):
+    """Each predicate that replaced a test here rejects a hand-built
+    output that breaks its invariant. The battery's oracle is an
+    all-true literal, so only this fails when a predicate is weakened
+    to always-true. No parent key runs: `_frame` serves the frames."""
+    from base_etl_spark.io import local_frame
+    from base_etl_spark.operators import selfcheck
+
+    dfs = {n: local_frame(spark, rows, ddl) for n, (ddl, rows) in _PLANTED[key].items()}
+    monkeypatch.setattr(selfcheck, "_frame", lambda k, _t: dfs[k])
+    assert not selfcheck._CHECK_FNS[key](SimpleNamespace(**dfs))
 
 
 def test_minhash_equals_exact_jaccard(spark):
-    """Both tiers measure 3-word-shingle Jaccard; banding (8x4 @
-    theta=.6 -> ~97% recall/pair, and the corpus' true near-dups sit well
-    above theta) finds every exact pair; verification guarantees
-    precision == 1."""
+    """Both tiers measure 3-word-shingle Jaccard. Banding (8 bands of 4
+    rows) recalls a pair of Jaccard j with probability 1-(1-j^4)^8,
+    0.67 at theta = 0.6 and higher above it; the corpus' true near-dups
+    sit well above theta, and at sf0.01 x10 11 of 25,000 exact pairs were
+    missed. Verification guarantees precision == 1."""
     exact = _rows(spark, "dedup_near_jaccard")
     mh = _rows(spark, "dedup_near_minhash")
     assert mh <= exact  # verification: no false positives, ever
@@ -61,17 +158,6 @@ def test_minhash_equals_exact_jaccard(spark):
 
 def test_blocked_topk_equals_expression_topk(spark):
     assert _rows(spark, "sim_topk_blocked") == _rows(spark, "sim_topk")
-
-
-def test_ivf_recall_vs_brute_force(spark):
-    brute = {(r.probe_id, r.neighbor_id) for r in _QS["sim_topk"](spark, SF_TEST).collect()}
-    ivf = {(r.probe_id, r.neighbor_id) for r in _QS["sim_topk_ivf"](spark, SF_TEST).collect()}
-    recall = len(brute & ivf) / len(brute)
-    # the fixture embeddings are near-orthogonal random vectors (no real
-    # cluster structure, same-label mean cosine ~0.002 measured), so with
-    # nprobe/nlist = 5/10 the expected recall is only ~0.5; the assertion
-    # checks the pruning machinery, not ANN quality on random data
-    assert recall >= 0.3, recall
 
 
 def test_pandas_udf_matches_builtin(spark):
@@ -87,20 +173,7 @@ def test_entropy_pandas_matches_expression(spark):
     assert _rows(spark, "udaf_entropy_pandas") == _rows(spark, "udaf_entropy")
 
 
-def test_simhash_near_dup_is_symmetric_sane(spark):
-    df = _QS["dedup_simhash"](spark, SF_TEST)
-    rows = df.collect()
-    assert all(r.doc_a < r.doc_b and r.hamming <= 3 for r in rows)
 
-
-def test_late_data_subset_of_all_windows(spark):
-    late = {r.window_start for r in _QS["stream_late_data"](spark, SF_TEST).collect()}
-    # every surviving window is near the max ts (watermark horizon)
-    from base_etl_spark import load_tables
-
-    t = load_tables(spark, SF_TEST)
-    max_ts = t.events.agg(F.max("ts")).collect()[0][0]
-    assert late and all((max_ts - w).total_seconds() <= 3600 + 900 for w in late)
 
 
 def test_multimodal_pipeline_plumbing(spark):
@@ -638,118 +711,25 @@ def test_mix_weights_flatten_to_uniform(spark, tables):
         assert abs(r.token_share * r.mix_weight - 1.0 / n) < 1e-4
 
 
-def test_kmeans_fixed_point_and_determinism(spark, tables):
-    """The returned assignment must be a Lloyd fixed point: (a) every
-    vec_id assigned exactly once to a cluster in [0, k); (b) re-deriving
-    centroids as the means of the returned clusters and brute-force
-    reassigning by nearest centroid reproduces the same assignment
-    (convergence => assignment is stable under one more Lloyd step);
-    (c) dist is the true L2 to the recomputed centroid within tol."""
-    import math
-
-    rows = queries()["cluster_kmeans"].tables_fn(tables).collect()
-    n = tables.embeddings.count()
-    assert len(rows) == n
-    assert len({r.vec_id for r in rows}) == n
-    assert all(0 <= r.cluster_id < 8 for r in rows)
-
-    emb = {r.vec_id: list(r.embedding) for r in tables.embeddings.collect()}
-    by_cluster: dict[int, list[int]] = {}
-    for r in rows:
-        by_cluster.setdefault(r.cluster_id, []).append(r.vec_id)
-    cents = {
-        cid: [sum(emb[v][i] for v in vs) / len(vs) for i in range(len(next(iter(emb.values()))))]
-        for cid, vs in by_cluster.items()
-    }
-    for r in rows:
-        dists = {
-            cid: math.sqrt(sum((a - b) ** 2 for a, b in zip(emb[r.vec_id], c)))
-            for cid, c in cents.items()
-        }
-        best = min(dists, key=lambda cid: (dists[cid], cid))
-        # stable under one more Lloyd step (ties broken by cluster id,
-        # matching the struct-ordering tie-break in the operator)
-        assert dists[r.cluster_id] <= dists[best] + 1e-4
-        assert abs(r.dist - dists[r.cluster_id]) < 1e-3
 
 
-def test_hll_rollup_estimates_within_5pct_of_exact(spark):
-    from pyspark.sql import functions as F
 
-    from base_etl_spark import load_tables, queries
-
-    t = load_tables(spark, SF_TEST)
-    out = {(r.grain, r.day): r.est_users for r in queries()["sketch_hll_rollup"](spark, SF_TEST).collect()}
-    exact_daily = {
-        str(r.day): r.n
-        for r in t.events.groupBy(F.to_date("ts").alias("day"))
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    exact_total = t.events.select("user_id").distinct().count()
-    for day, n in exact_daily.items():
-        assert abs(out[("day", day)] - n) <= max(1, 0.05 * n), day
-    assert abs(out[("total", None)] - exact_total) <= max(1, 0.05 * exact_total)
-    # merge-of-daily-sketches must estimate the same population as one
-    # global sketch would: the union estimate can't be below any daily one
-    assert out[("total", None)] >= max(v for (g, _), v in out.items() if g == "day")
-
-
-def test_pagerank_mass_fixed_point_determinism(spark):
-    from pyspark.sql import functions as F
-
-    from base_etl_spark import load_tables, queries
-
-    t = load_tables(spark, SF_TEST)
-    out = queries()["graph_pagerank"](spark, SF_TEST)
-    rows = {r.node: r.rank for r in out.collect()}
-    # mass conservation: symmetrized graph has no dangling nodes
-    assert abs(sum(rows.values()) - 1.0) < 1e-6
-    # node set == all trade participants on both sides
-    n_cust = t.orders.select("o_custkey").distinct().count()
-    n_supp = t.lineitem.select("l_suppkey").distinct().count()
+def test_pagerank_mass_fixed_point_determinism(spark, tables):
+    """Fixture pins beside `_chk_pagerank` (mass and teleport floor):
+    every trade participant is a node (a childless order's customer
+    drops out on fuzz data, so the battery states only an upper bound),
+    and reruns agree at the rounded precision."""
+    rows = _rows(spark, "graph_pagerank")
+    n_cust = tables.orders.select("o_custkey").distinct().count()
+    n_supp = tables.lineitem.select("l_suppkey").distinct().count()
     assert len(rows) == n_cust + n_supp
-    # determinism at the rounded precision
-    rows2 = {r.node: r.rank for r in queries()["graph_pagerank"](spark, SF_TEST).collect()}
-    assert rows == rows2
-    # every rank at least the teleport floor
-    base = 0.15 / len(rows)
-    assert all(v >= base - 1e-12 for v in rows.values())
-
-
-def test_hll_overlap_tracks_exact_retention(spark):
-    from pyspark.sql import functions as F
-
-    from base_etl_spark import load_tables, queries
-
-    t = load_tables(spark, SF_TEST)
-    out = {r.day: r.est_retained for r in queries()["sketch_hll_overlap"](spark, SF_TEST).collect()}
-    days = t.events.select(F.to_date("ts").alias("d"), "user_id").distinct()
-    a = days.select(F.col("d").alias("d0"), F.col("user_id").alias("u0"))
-    b = days.select(F.col("d").alias("d1"), F.col("user_id").alias("u1"))
-    exact = {
-        str(r.d0): r.n
-        for r in a.join(
-            b, (F.date_add(F.col("d0"), 1) == F.col("d1")) & (F.col("u0") == F.col("u1"))
-        )
-        .groupBy("d0")
-        .agg(F.countDistinct("u0").alias("n"))
-        .collect()
-    }
-    assert set(out) == set(exact)
-    for day, n in exact.items():
-        # inclusion-exclusion triples the sketch error: wide tolerance
-        assert abs(out[day] - n) <= max(3, 0.15 * n), (day, out[day], n)
+    assert rows == _rows(spark, "graph_pagerank")
 
 
 def test_compress_ratio_bounds_and_monotonicity(spark):
-    from base_etl_spark import queries
-
-    rows = queries()["text_compress_ratio"](spark, SF_TEST).collect()
-    assert rows and all(0.0 < r.compress_ratio <= 1.5 for r in rows)
-    # constructed docs: pure repetition must compress harder than varied text
+    """Constructed docs: pure repetition must compress harder than
+    varied text (the ratio bounds are `_chk_compress_ratio`'s)."""
     from base_etl_spark.operators.llm_text import _zratio
-    from pyspark.sql import functions as F
 
     df = spark.createDataFrame(
         [(1, "spam " * 200), (2, " ".join(f"w{i}x{i * 7 % 13}" for i in range(200)))],
@@ -759,39 +739,6 @@ def test_compress_ratio_bounds_and_monotonicity(spark):
     assert got[1] < got[2] * 0.5
 
 
-def test_python_udtf_matches_expression_twin(spark):
-    """udtf_python's chunking must equal the pure-expression slice twin
-    row-for-row (the UDTF exists to pin the API, not new semantics)."""
-    from pyspark.sql import functions as F
-
-    from base_etl_spark import load_tables, queries
-
-    got = sorted(
-        (r.doc_id, r.chunk_idx, r.start_tok, r.n_toks, r.chunk_chars)
-        for r in queries()["udtf_python"](spark, SF_TEST).collect()
-    )
-    t = load_tables(spark, SF_TEST)
-    toks = F.split("text", " ")
-    n_chunks = F.ceil(F.size(toks) / 16).cast("int")
-    twin = (
-        t.documents.select("doc_id", toks.alias("ws"), n_chunks.alias("nc"))
-        .select("doc_id", "ws", F.explode(F.sequence(F.lit(0), F.col("nc") - 1)).alias("ci"))
-        .select(
-            "doc_id",
-            F.col("ci").alias("chunk_idx"),
-            (F.col("ci") * 16).alias("start_tok"),
-            F.size(F.slice("ws", F.col("ci") * 16 + 1, 16)).alias("n_toks"),
-            F.length(F.concat_ws(" ", F.slice("ws", F.col("ci") * 16 + 1, 16))).alias(
-                "chunk_chars"
-            ),
-        )
-    )
-    want = sorted(
-        (r.doc_id, r.chunk_idx, r.start_tok, r.n_toks, r.chunk_chars) for r in twin.collect()
-    )
-    assert got == want
-
-
 def test_mean_family_inequality(spark):
     from base_etl_spark import queries
 
@@ -799,66 +746,15 @@ def test_mean_family_inequality(spark):
         assert r.arith_mean >= r.geo_mean >= r.harm_mean > 0
 
 
-def test_binary_files_cover_all_tables(spark):
-    from base_etl_spark import queries
-    from base_etl_spark.schemas import TABLE_NAMES
-
-    rows = queries()["scan_binary_files"](spark, SF_TEST).collect()
-    names = [r.file_name for r in rows]
-    assert sorted(names) == sorted(f"{n}.parquet" for n in TABLE_NAMES)
-    assert all(r.n_bytes > 0 for r in rows)
-
-
 def test_minhash_estimates_within_binomial_bound(spark):
-    import math
-
-    from base_etl_spark import queries
-
-    rows = queries()["dedup_minhash_estimate"](spark, SF_TEST).collect()
-    assert rows
-    errs = []
-    for r in rows:
-        if r.jaccard_exact is None:
-            continue  # candidate below the exact-pair threshold — fine
-        j = r.jaccard_exact
-        se = math.sqrt(max(j * (1 - j), 1e-9) / 32)
-        assert abs(r.jaccard_est - j) <= 4 * se + 1 / 32 + 1e-6, (r, se)
-        errs.append(r.jaccard_est - j)
-    assert errs and abs(sum(errs) / len(errs)) < 0.1
+    """Fixture pin: `_chk_minhash_estimate` states the bound but holds
+    vacuously on a report without exact pairs (one_row has none), so the
+    fixture must yield candidates that carry an exact Jaccard."""
+    df = _QS["dedup_minhash_estimate"](spark, SF_TEST)
+    assert df.filter(F.col("jaccard_exact").isNotNull()).count() > 0
 
 
-def test_freq_items_superset_guarantee(spark):
-    """freqItems' sketch contract: every value whose exact relative
-    frequency exceeds the support threshold MUST appear (false negatives
-    forbidden; false positives tolerated)."""
-    from base_etl_spark import load_tables, queries
-    from tests.conftest import SF_TEST
 
-    t = load_tables(spark, SF_TEST)
-    got = {r.frequent_item for r in queries()["agg_freq_items"](spark, SF_TEST).collect()}
-    total = t.orders.count()
-    exact = {
-        r.o_orderpriority
-        for r in t.orders.groupBy("o_orderpriority").count().collect()
-        if r["count"] / total > 0.15
-    }
-    assert exact, "fixture must have at least one heavy hitter at 15%"
-    assert exact <= got
-
-
-def test_file_stats_invariants(spark, tables):
-    """etl_file_stats (R): per-file rows sum to the table count, every
-    file is non-empty, and the per-file key ranges bound the global."""
-    from tests.conftest import SF_TEST
-
-    rows = _QS["etl_file_stats"](spark, SF_TEST).collect()
-    assert rows and all(r.n_rows > 0 and r.file_bytes > 0 for r in rows)
-    assert sum(r.n_rows for r in rows) == tables.orders.count()
-    lo = tables.orders.agg(F.min("o_orderkey")).first()[0]
-    hi = tables.orders.agg(F.max("o_orderkey")).first()[0]
-    assert min(r.min_key for r in rows) == lo
-    assert max(r.max_key for r in rows) == hi
-    assert {r.file_ord for r in rows} == set(range(1, len(rows) + 1))
 
 
 def test_mmr_kernel_prefers_diversity():
@@ -893,31 +789,6 @@ def test_mmr_kernel_prefers_diversity():
     assert by_id[11] < 0.40  # the diversity penalty genuinely bit
 
 
-def test_mmr_integration_invariants(spark):
-    """sim_mmr_rerank over the fixture: 5 distinct ranks per probe,
-    rank-1 equals the cosine top-1 (first greedy pick has no diversity
-    penalty), every pick comes from that probe's top-20 candidates, and
-    scores never increase with rank (the greedy objective is
-    assert rank-1 max)."""
-    got = {}
-    for r in _QS["sim_mmr_rerank"](spark, SF_TEST).collect():
-        got.setdefault(r.probe_id, []).append(r)
-    top = {}
-    for r in _QS["sim_topk"](spark, SF_TEST).collect():
-        top.setdefault(r.probe_id, []).append((r.rn, r.neighbor_id))
-    assert set(got) == set(top)
-    for p, rows in got.items():
-        ranks = sorted(r.rank for r in rows)
-        assert ranks == [1, 2, 3, 4, 5]
-        ids = [r.neighbor_id for r in rows]
-        assert len(set(ids)) == 5
-        rank1 = next(r.neighbor_id for r in rows if r.rank == 1)
-        top1 = next(i for rn, i in top[p] if rn == 1)
-        assert rank1 == top1
-        s1 = next(r.mmr_score for r in rows if r.rank == 1)
-        assert all(s1 >= r.mmr_score for r in rows)
-
-
 def test_fuzzy_join_finds_every_planted_twin(spark):
     """join_fuzzy_blocked recall on its own construction: every mangle
     class is sort-local by design (trailing junk / last-char sub /
@@ -933,21 +804,6 @@ def test_fuzzy_join_finds_every_planted_twin(spark):
     keys = [r.s_suppkey for r in t.supplier.select("s_suppkey").collect()]
     missing = [k for k in keys if (k, k) not in pairs]
     assert missing == []
-
-
-def test_cms_estimates_obey_one_sided_error_law(spark):
-    """sketch_cms_freq: the count-min law is one-sided — a cell only
-    ever OVERcounts — so exact <= estimate <= exact + eps*N must hold
-    for every event type (eps=1e-3, confidence .99; the bound is
-    deterministic here: fixed seed, fixed fixture)."""
-    rows = _QS["sketch_cms_freq"](spark, SF_TEST).collect()
-    assert rows, "events fixture is non-empty"
-    total = sum(r.n_exact for r in rows)
-    slack = max(1, int(0.001 * total) + 1)
-    for r in rows:
-        assert r.n_est >= r.n_exact, (r.event_type, r.n_exact, r.n_est)
-        assert r.n_est - r.n_exact <= slack, (r.event_type, r.n_exact, r.n_est)
-        assert r.n_over == r.n_est - r.n_exact
 
 
 def test_ks_stat_matches_direct_computation(spark):
@@ -1464,11 +1320,8 @@ def test_pca_power_planted_direction(spark):
 def test_pca_power_residual_on_fixture(spark):
     """Eigen residual ‖Cv − λv‖/λ on the real fixture: the fixed-15-
     round iterate must be a near-eigenvector even on the isotropic
-    corpus (conv_delta reported, not hidden). Bounds re-measured when
-    r8 cut the round contract 60→15 (the 60-round sweep cost 184 s at
-    sf0.01, ~25x any other key, for a residual gain of 0.03→0.05 on a
-    corpus with no real top axis): sf0.001 resid 0.0524 / conv_delta
-    1.4e-3 measured 2026-08-15."""
+    corpus (conv_delta reported, not hidden). Measured at sf0.001:
+    resid 0.0524, conv_delta 1.4e-3."""
     import numpy as np
 
     from base_etl_spark import load_tables
@@ -1560,7 +1413,7 @@ def _ref_bpe(word_freqs: dict, n_merges: int):
 
 
 def test_bpe_batch_guard_fuzz():
-    """The r12 batched-merge guard (_pick_merge_batch) must yield a
+    """The batched-merge guard (_pick_merge_batch) must yield a
     merge table AND final vocab identical to the sequential reference
     for ANY input — replayed here in pure Python (no Spark) over
     adversarial fuzz vocabs: 2-4 letter alphabets (forces shared-symbol
@@ -2423,28 +2276,10 @@ def test_scd3_planted(spark):
 
 
 def test_kmv_distinct_within_tolerance(spark):
-    """KMV per-type rows fall back to EXACT counts when the group holds
-    fewer than k=256 hashes (the fixture case); the merged ALL row must
-    equal the deduplicated union, never the multiset sum (the shared-
-    user overcount caught at build time). A planted 20k-user universe
-    exercises the real (k-1)/u estimator within ~4/sqrt(k)."""
-    from pyspark.sql import functions as F
-
-    from base_etl_spark import load_tables
+    """A planted 20k-user universe exercises the real (k-1)/u estimator
+    within ~4/sqrt(k); the fixture's groups sit below k=256 distinct
+    users, where `_chk_kmv` demands the exact count."""
     from base_etl_spark.registry import REGISTRY
-
-    got = {r.event_type: r for r in _QS["sketch_kmv_distinct"](spark, SF_TEST).collect()}
-    t = load_tables(spark, SF_TEST)
-    exact = {
-        r.event_type: r.n
-        for r in t.events.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    exact["ALL"] = t.events.select("user_id").distinct().count()
-    assert set(got) == set(exact)
-    for et, e in exact.items():
-        assert got[et].est_distinct == float(e), (et, got[et], e)  # exact tier
 
     class _T:
         events = spark.range(0, 60_000).select(
@@ -2551,61 +2386,23 @@ def test_k_core_planted_graph(spark):
 
 
 def test_poisson_bootstrap_selfchecks(spark):
-    """R-key invariants: the hash-seeded bootstrap is deterministic
-    across runs, SE is positive, the percentile CI brackets the exact
-    corpus mean (Poisson(1) weights are unbiased), and the CI is
-    ordered. Fixture n is large enough that a CI miss would mean the
-    weights are wrong, not bad luck."""
-    from base_etl_spark.registry import REGISTRY
-    from tests.conftest import SF_TEST
-
-    fn = REGISTRY["sample_poisson_bootstrap"].fn
-    (r1,) = fn(spark, SF_TEST).collect()
-    (r2,) = fn(spark, SF_TEST).collect()
-    assert r1 == r2  # seeded hash => bit-identical reruns
-    assert r1.se_boot > 0
-    assert r1.ci_lo < r1.ci_hi
-    assert r1.ci_lo <= r1.point_mean <= r1.ci_hi
+    """Fixture pins beside `_chk_poisson_bootstrap` (the CI brackets the
+    point mean): the hash-seeded bootstrap reruns bit-identically, and
+    on a corpus of many distinct documents the SE and the CI width are
+    strictly positive (a one-document corpus, as on one_row, can give
+    zero)."""
+    (r1,) = _QS["sample_poisson_bootstrap"](spark, SF_TEST).collect()
+    (r2,) = _QS["sample_poisson_bootstrap"](spark, SF_TEST).collect()
+    assert r1 == r2
+    assert r1.se_boot > 0 and r1.ci_lo < r1.ci_hi
 
 
 def test_decile_lift_approx_matches_exact_twin_small_n(spark):
-    """agg_decile_lift_approx's binding contract (its docstring): at
-    n << GK accuracy the sketch boundaries are exact, so the whole
-    table must EQUAL the exact twin's; conservation and bucket balance
-    are then implied but asserted separately so a future fixture where
-    n grows past exactness still pins them."""
-    approx = _rows(spark, "agg_decile_lift_approx")
-    exact = _rows(spark, "agg_decile_lift")
-    assert approx == exact
-    n_cust = _QS["agg_decile_lift"](spark, SF_TEST).agg(F.sum("n_cust")).first()[0]
-    got = _QS["agg_decile_lift_approx"](spark, SF_TEST).agg(
-        F.sum("n_cust"), F.sum("n_resp")
-    ).first()
-    exp = _QS["agg_decile_lift"](spark, SF_TEST).agg(
-        F.sum("n_cust"), F.sum("n_resp")
-    ).first()
-    assert (got[0], got[1]) == (exp[0], exp[1])  # totals conserve exactly
-    for r in _QS["agg_decile_lift_approx"](spark, SF_TEST).collect():
-        # GK rank error <= n/accuracy -> each decile within bound of n/10
-        bound = n_cust / 10 + max(2.0, 2 * n_cust / 10000)
-        assert r.n_cust <= bound, (r.decile, r.n_cust, bound)
-
-
-def test_pq_training_reduces_init_distortion(spark):
-    """sim_pq_distortion is the round-0 (init-codebook) report;
-    sim_pq_quantize reports after 5 Lloyd rounds. Lloyd's assignment
-    and update steps are each non-increasing in total SSE, so the
-    trained corpus-weighted mean distortion must not exceed init's."""
-    def weighted_mse(key):
-        row = (
-            _QS[key](spark, SF_TEST)
-            .agg(F.sum(F.col("n_vecs") * F.col("mse")), F.sum("n_vecs"))
-            .first()
-        )
-        return row[0] / row[1]
-
-    init, trained = weighted_mse("sim_pq_distortion"), weighted_mse("sim_pq_quantize")
-    assert trained <= init + 1e-6, (trained, init)
+    """Fixture pin: at n << GK accuracy the sketch boundaries are exact,
+    so the whole table EQUALS the exact twin's. Perturbed data can split
+    a tied decile edge differently, so `_chk_decile_lift_approx` states
+    only conservation and the GK bucket bound."""
+    assert _rows(spark, "agg_decile_lift_approx") == _rows(spark, "agg_decile_lift")
 
 
 def test_spectral_centroid_matches_numpy_replica(spark):
@@ -2649,45 +2446,7 @@ def test_spectral_centroid_planted_tone():
     assert b < 0.05 * f, b
 
 
-def test_approx_top_k_exact_below_sketch_capacity(spark):
-    """agg_approx_top_k R contract: with maxItemsTracked far above the
-    distinct-part count, the sketch counts are exact — the top-10
-    (key, count) multiset must equal the exact groupBy top-10's count
-    multiset, and the returned key set must be A valid top-10 (every
-    returned count >= the exact 10th-largest count)."""
-    from base_etl_spark.io import load_tables
 
-    li = load_tables(spark, SF_TEST).lineitem
-    exact = (
-        li.groupBy("l_partkey").count()
-        .orderBy(F.desc("count"), "l_partkey")
-        .limit(50)
-        .collect()
-    )
-    exact_counts = sorted((r["count"] for r in exact), reverse=True)[:10]
-    got = _QS["agg_approx_top_k"](spark, SF_TEST).collect()
-    assert len(got) == 10
-    exact_by_key = {r.l_partkey: r["count"] for r in exact}
-    for r in got:
-        assert exact_by_key.get(r.l_partkey) == r.n_lines, (r, "count not exact")
-    assert sorted((r.n_lines for r in got), reverse=True) == exact_counts
-
-
-def test_hll_native_within_error_envelope(spark):
-    """agg_hll_native R contract: every per-group estimate within 5%
-    of the exact distinct count (lgConfigK=12 -> ~1.6% rse; 3 sigma),
-    and the union-merged ALL row within 5% of the exact global."""
-    from base_etl_spark.io import load_tables
-
-    ev = load_tables(spark, SF_TEST).events
-    exact = {r.event_type: r.n for r in
-             ev.groupBy("event_type").agg(F.countDistinct("user_id").alias("n")).collect()}
-    exact["ALL"] = ev.select("user_id").distinct().count()
-    got = {r.event_type: r.n_users_est
-           for r in _QS["agg_hll_native"](spark, SF_TEST).collect()}
-    assert set(got) == set(exact)
-    for k, n in exact.items():
-        assert abs(got[k] - n) <= max(2, 0.05 * n), (k, got[k], n)
 
 
 def test_zorder_ranges_bound_both_dimensions(spark):
@@ -2706,9 +2465,9 @@ def test_zorder_ranges_bound_both_dimensions(spark):
 
 
 def test_markov_stationary_is_fixed_point(spark):
-    """events_markov_stationary R contract: pi is a probability vector,
-    a fixed point of the row-stochastic transition matrix (rebuilt here
-    from the parent key), and the dominant left eigenvector."""
+    """Numpy replica beside `_chk_markov` (simplex, fixed point): pi is
+    strictly positive and the dominant left eigenvector of the
+    row-stochastic transition matrix (rebuilt here from the parent key)."""
     import numpy as np
 
     pi_rows = _QS["events_markov_stationary"](spark, SF_TEST).collect()
@@ -2720,13 +2479,12 @@ def test_markov_stationary_is_fixed_point(spark):
     pi = np.zeros(k)
     for r in pi_rows:
         pi[idx[r.event_type]] = r.stationary_p
-    assert abs(pi.sum() - 1.0) < 1e-6 and (pi > 0).all()
+    assert (pi > 0).all()
     counts = np.zeros((k, k))
     for r in pm:
         counts[idx[r.prev], idx[r.curr]] = r.n_transitions
     rs = counts.sum(axis=1, keepdims=True)
     p = np.where(rs > 0, counts / np.where(rs == 0, 1, rs), 1.0 / k)
-    assert np.abs(pi @ p - pi).max() < 1e-6  # stationarity
     vals, vecs = np.linalg.eig(p.T)
     lead = np.real(vecs[:, np.argmax(np.real(vals))])
     lead = lead / lead.sum()
@@ -2734,17 +2492,17 @@ def test_markov_stationary_is_fixed_point(spark):
 
 
 def test_nprobe_sweep_monotone_and_exact_at_full_scan(spark):
-    """sim_ivf_nprobe_sweep R contract: recall is monotone
-    nondecreasing in nprobe, and at nprobe = nlist (10 labels) the
-    pruned search degenerates to brute force -> recall == 1.0."""
+    """Fixture pins beside `_chk_nprobe_sweep` (monotone recall): at
+    nprobe = nlist (10 labels) the pruned search degenerates to brute
+    force, so recall == 1.0, and the nprobe=5 point equals sim_topk_ivf's
+    own recall (n_possible is the probe budget, which equals the brute
+    row count only on a fixture like this one)."""
     rows = sorted(
         _QS["sim_ivf_nprobe_sweep"](spark, SF_TEST).collect(),
         key=lambda r: r.nprobe,
     )
     assert [r.nprobe for r in rows] == [1, 2, 3, 5, 10]
-    recalls = [r.recall for r in rows]
-    assert all(a <= b + 1e-9 for a, b in zip(recalls, recalls[1:])), recalls
-    assert recalls[-1] == 1.0, recalls
+    assert rows[-1].recall == 1.0, rows
     # cross-key coherence: the nprobe=5 sweep point must equal the
     # recall computed directly from sim_topk_ivf's own rows
     exact = {(r.probe_id, r.neighbor_id) for r in _QS["sim_topk"](spark, SF_TEST).collect()}
